@@ -130,10 +130,7 @@ def _cmd_pipeline(args: argparse.Namespace) -> None:
     from .plans.pipeline import run_pipeline
 
     spark = get_spark(app_name="kg-pipeline")
-    out = run_pipeline(
-        spark, args.work_dir, n_docs=args.n_docs, seed=args.seed,
-        salt_buckets=args.salt_buckets,
-    )
+    out = run_pipeline(spark, args.work_dir, n_docs=args.n_docs, seed=args.seed)
     print({k: v.count() for k, v in out.items()})
 
 
@@ -429,7 +426,6 @@ def main(argv: list[str] | None = None) -> None:
     pl.add_argument("--work-dir", required=True)
     pl.add_argument("--n-docs", type=int, default=2000)
     pl.add_argument("--seed", type=int, default=42)
-    pl.add_argument("--salt-buckets", type=int, default=1)
     pl.set_defaults(fn=_cmd_pipeline)
 
     c = sub.add_parser("coverage", help="edge-endpoint vs nodes QC check")

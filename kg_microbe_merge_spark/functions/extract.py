@@ -405,110 +405,3 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
             F.coalesce(F.col(out_col), extract_text_udf(F.col(html_col))),
         )
     return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
-
-
-# ---------------------------------------------------------------------------
-# Zero-Python JVM twin ("UDFs are the slow path"): for documents inside a
-# conservatively-whitelisted plain-tag class, the whole extraction runs as
-# whole-stage-codegen Catalyst expressions — no Arrow hop, no Python
-# worker, no per-document Python objects. Documents OUTSIDE the class
-# (comments/PI/declarations, charrefs, bogus end tags, '<'/'>' inside
-# quoted attributes, unbalanced skip containers) are routed to the
-# Arrow-UDF reference path, so BYTE-IDENTITY with extract_text_py holds
-# unconditionally: the JVM expressions are only ever evaluated on inputs
-# where each regex pass is provably equivalent to the parser
-# (tests/test_extract_jvm.py proves equality over the corpus and over
-# adversarial + fuzzed inputs through the eligibility filter).
-
-# The whitelist class: the document is a sequence of (a) text runs with
-# no '<' '>' '&', or (b) tags of the exact shape
-# </name>, <name>, <name attr="value-without-<>&"...>, <name .../>.
-# Inside this class, tags never hide '>' in attribute values, there are
-# no comments/declarations/PIs/charrefs and no CDATA end-tag
-# ambiguities, so tag boundaries ARE the regex-visible boundaries.
-# Possessive quantifiers (*+ ++) throughout: every quantified class
-# excludes its own delimiter ([^<>&] stops at tag/charref starts,
-# [^>] at tag end, [^"<>&] at the closing quote), so possessive
-# matching is semantics-preserving here and removes the backtracking
-# state Java's engine would otherwise keep per character — measured
-# 3.2x on the class-validation scan.
-_JVM_PLAIN_DOC_RE = (
-    r"\A(?:[^<>&]++"
-    r"|</[a-zA-Z][a-zA-Z0-9]*+>"
-    r"""|<[a-zA-Z][a-zA-Z0-9]*+(?:\s++[a-zA-Z-]++="[^"<>&]*+")*+\s*+/?>"""
-    r")*+\z"
-)
-_SKIP_ALT = "|".join(sorted(_SKIP_TAGS))
-_BLOCK_ALT = "|".join(sorted(_BLOCK_TAGS, key=len, reverse=True))
-# whole skip elements, case-insensitive, DOTALL; within the class an end
-# tag is exactly </name>
-_JVM_SKIP_ELEM_RE = rf"(?is)<({_SKIP_ALT})(?:>|\s[^>]*+>|\s*+/>).*?</\1>"
-# any skip-tag token LEFT OVER after element removal means nesting or an
-# unbalanced container -> route the row to the parser path
-_JVM_SKIP_LEFTOVER_RE = rf"(?i)</?(?:{_SKIP_ALT})\b"
-_JVM_BLOCK_TAG_RE = rf"(?i)</?(?:{_BLOCK_ALT})(?:>|\s[^>]*+>|\s*+/>)"
-_JVM_ANY_TAG_RE = r"</?[a-zA-Z][^>]*+>"
-
-
-def _jvm_clean_blocks(no_skip):
-    """skip-container-free string Column -> block-marked, tag-stripped
-    Column. Takes the ALREADY skip-removed form so callers computing
-    eligibility (which also needs it) pay the pass once — Catalyst does
-    not CSE identical regexp_replace subtrees across expressions."""
-    marked = F.regexp_replace(no_skip, _JVM_BLOCK_TAG_RE, "\x00")
-    return F.regexp_replace(marked, _JVM_ANY_TAG_RE, "")
-
-
-def jvm_no_skip(html_col) -> "F.Column":
-    """Shared intermediate: decoded html with whole skip containers
-    removed."""
-    return F.regexp_replace(html_col.cast("string"), _JVM_SKIP_ELEM_RE, "")
-
-
-def jvm_extract_eligible(html_col) -> "F.Column":
-    """True iff the JVM expression pipeline is provably byte-identical
-    to :func:`extract_text_py` for this document. Uses the
-    non-validating binary→string cast (Spark 4's ``decode`` THROWS on
-    malformed UTF-8) plus an explicit ``is_valid_utf8`` condition —
-    invalid byte sequences take the Python path, whose
-    ``errors="replace"`` semantics the JVM twin does not model."""
-    src = html_col.cast("string")
-    in_class = src.rlike(_JVM_PLAIN_DOC_RE)
-    balanced = ~jvm_no_skip(html_col).rlike(_JVM_SKIP_LEFTOVER_RE)
-    return (
-        html_col.isNotNull()
-        & F.is_valid_utf8(html_col)
-        & in_class
-        & balanced
-    )
-
-
-def jvm_extract_eligible_pre(html_col, no_skip_col) -> "F.Column":
-    """Eligibility reusing a precomputed :func:`jvm_no_skip` column —
-    the fused-plan form (one skip-removal pass total)."""
-    return (
-        html_col.isNotNull()
-        & F.is_valid_utf8(html_col)
-        & html_col.cast("string").rlike(_JVM_PLAIN_DOC_RE)
-        & ~no_skip_col.rlike(_JVM_SKIP_LEFTOVER_RE)
-    )
-
-
-def jvm_extract_text(html_col) -> "F.Column":
-    """Whole-stage-codegen HTML→text; only valid where
-    :func:`jvm_extract_eligible` — callers must route other rows to
-    :func:`extract_text_udf`. (?U) makes Java's \\s match Python's
-    Unicode \\s; consecutive block flushes collapse because empty
-    blocks are filtered, exactly like the parser's empty-buffer flush."""
-    return jvm_extract_text_pre(jvm_no_skip(html_col))
-
-
-def jvm_extract_text_pre(no_skip_col) -> "F.Column":
-    """Text extraction from a precomputed :func:`jvm_no_skip` column."""
-    cleaned = _jvm_clean_blocks(no_skip_col)
-    blocks = F.split(cleaned, "\x00")
-    norm = F.transform(
-        blocks,
-        lambda b: F.trim(F.regexp_replace(b, r"(?U)\s+", " ")),
-    )
-    return F.array_join(F.filter(norm, lambda b: b != ""), "\n")

@@ -1,17 +1,19 @@
 """OpenIE-style (subject, predicate, object) triple extraction.
 
-Two implementations, same semantics:
+One pure function, two distributed plans over it:
 
 1. :func:`extract_triples_py` — pure single-threaded Python: THE
    reference implementation for the P/R ≥ 0.95 target (our deterministic
    stand-in for the reference pipeline's emitted triples, cf.
    BASELINE.json north_star).
 2. :func:`extract_triples_udf` — Arrow-batched pandas UDF returning
-   ``array<struct<subj,pred,obj,conf>>`` which callers ``explode`` —
-   the UDTF-shaped distributed path (no per-row Python; one Python
-   invocation per Arrow batch).
+   ``array<struct<subj,pred,obj,conf>>`` which :func:`with_triples`
+   explodes — the UDTF-shaped distributed path (no per-row Python; one
+   Python invocation per Arrow batch).
+3. :func:`triples_from_corpus` — the fused html → triples path: text
+   extraction and SVO extraction in one ``mapInPandas`` Arrow hop.
 
-A third, fully JVM-side variant :func:`extract_triples_regexp` uses
+A separate, fully JVM-side variant :func:`extract_triples_regexp` uses
 ``F.regexp_extract_all`` for the simple word-pattern grammar — zero
 Python in the hot path; used for the driver-testdata ``documents`` table
 where tokens are single lowercase words.
@@ -199,95 +201,6 @@ def triples_from_corpus(
             )
 
     return src.mapInPandas(gen, out_schema)
-
-
-def triples_from_corpus_jvm(
-    corpus: DataFrame,
-    lang: str | None = "en",
-    url_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Zero-Python twin of :func:`triples_from_corpus` — same output
-    rows (pytest-proven identical on the scaling corpus AND on
-    adversarial out-of-class html), different physical plan.
-
-    Rows whose html falls inside the whitelisted plain-tag class
-    (:func:`~..extract.jvm_extract_eligible`) run entirely as Catalyst
-    expressions: cast → skip-container removal → block marking → tag
-    strip → whitespace normalization → SVO ``regexp_extract_all``.
-    Rows OUTSIDE the class (or with pre-populated ``text``) are
-    resolved by the Arrow reference UDF, fed a NULL-MASKED html column
-    in the same single pass — the ArrowEvalPython node runs over all
-    rows but its batches carry bytes only for the rare out-of-class
-    documents, so correctness never depends on the regex twin handling
-    the open html grammar while eligible documents never cross Arrow.
-    At 100 TB this removes two full copies of every eligible document
-    (JVM→Arrow→Python) from the memory-bandwidth budget.
-    """
-    from ..functions.extract import (
-        extract_text_udf,
-        jvm_extract_eligible_pre,
-        jvm_extract_text_pre,
-        jvm_no_skip,
-    )
-
-    has_text = text_col in corpus.columns
-    src = corpus
-    if lang is not None and lang_col in corpus.columns:
-        src = src.filter(F.col(lang_col) == lang)
-
-    # Single-pass text resolution (one scan, no union; the expensive
-    # skip-container removal runs ONCE via an explicit intermediate
-    # column — Catalyst does not CSE identical regex subtrees):
-    #   1. pre-populated text wins (input contract),
-    #   2. class-eligible html extracts JVM-side,
-    #   3. everything else goes to the Arrow reference UDF — fed a
-    #      NULL-masked html column, so the Arrow batch carries bytes
-    #      ONLY for the rare out-of-class rows (nulls are ~free) even
-    #      though the ArrowEvalPython node runs over every row.
-    with_noskip = src.withColumn("_noskip", jvm_no_skip(F.col(html_col)))
-    eligible = jvm_extract_eligible_pre(F.col(html_col), F.col("_noskip"))
-    pre_text = F.col(text_col) if has_text else F.lit(None).cast("string")
-    need_py = pre_text.isNull() & ~F.coalesce(eligible, F.lit(False))
-    full_text = F.coalesce(
-        pre_text,
-        F.when(eligible, jvm_extract_text_pre(F.col("_noskip"))),
-        extract_text_udf(F.when(need_py, F.col(html_col))),
-    )
-
-    # SVO is ALWAYS JVM: its equivalence with extract_triples_py does
-    # not depend on the html class (same pattern string, (?U) Unicode
-    # \s, identical leftmost non-overlapping semantics; fuzz-proven in
-    # tests/test_extract_jvm.py over out-of-class documents too).
-    return (
-        with_noskip.select(F.col(url_col), full_text.alias("_text"))
-        .select(
-            url_col,
-            F.explode(
-                F.regexp_extract_all(F.col("_text"), F.lit(_JVM_SVO_PAT), 0)
-            ).alias("_m"),
-        )
-        .select(
-            url_col,
-            F.regexp_extract(F.col("_m"), _JVM_SVO_PAT, 1).alias("subj"),
-            F.translate(
-                F.regexp_extract(F.col("_m"), _JVM_SVO_PAT, 2), " ", "_"
-            ).alias("pred"),
-            F.regexp_extract(F.col("_m"), _JVM_SVO_PAT, 3).alias("obj"),
-            F.lit(1.0).alias("conf"),
-        )
-        .filter(
-            ~F.lower(F.col("subj")).isin(*STOPWORDS)
-            & ~F.lower(F.col("obj")).isin(*STOPWORDS)
-        )
-    )
-
-
-# (?U): Java \s matches Python's Unicode \s. Same pattern string as
-# _TRIPLE_RE; leftmost non-overlapping matches in both engines.
-_JVM_SVO_PAT = rf"(?U)({_ENTITY_RE})\s+({_VERB_ALT})\s+({_ENTITY_RE})"
 
 
 def extract_triples_regexp(

@@ -136,7 +136,6 @@ def run_pipeline(
     work_dir: str,
     n_docs: int = 2000,
     seed: int = 42,
-    salt_buckets: int = 1,
 ) -> dict[str, DataFrame]:
     """Full corpus→KG run; resumable from the last committed stage."""
     run = PipelineRun(spark, work_dir)
@@ -225,7 +224,7 @@ def run_pipeline(
             F.col("id").alias("name"),
             F.lit("webkg_pipeline").alias("provided_by"),
         )
-        return nodes_merge(raw, [], salt_buckets=salt_buckets, sort_output=False)
+        return nodes_merge(raw, [], sort_output=False)
 
     nodes = run.stage("kgx_nodes", build_nodes, fp, metrics_key="id")
 

@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "kg_microbe_merge_spark",
@@ -27,9 +25,11 @@ def get_spark(
     shuffle-partition count (≈ 2-3× total cores); every other knob here is
     size-independent policy.
     """
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # SPARK_GRAFT_CPUS is a deployment override; by default use the CPUs
+    # this process may run on
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cores}]")
-    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle = shuffle_partitions or cores
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -17,22 +17,10 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from kg_microbe_merge_spark.functions.linking import link_mentions
-from kg_microbe_merge_spark.functions.triples import (
-    triples_from_corpus,
-    triples_from_corpus_jvm,
-)
+from kg_microbe_merge_spark.functions.triples import triples_from_corpus
 from kg_microbe_merge_spark.operators.merge import edges_merge_provenance
 from kg_microbe_merge_spark.session import get_spark
 from kg_microbe_merge_spark.sources.corpus import alias_dictionary
-
-# SCALING_PIPELINE=fused (default) | jvm
-#   fused: ONE mapInPandas Arrow hop (extract+SVO), the general-html
-#          production path.
-#   jvm:   zero-Python whole-stage twin (functions/triples.py:
-#          triples_from_corpus_jvm) — template-clean documents never
-#          cross Arrow at all; out-of-class rows fall back to fused.
-#          Row-identical to fused (tests/test_extract_jvm.py).
-PIPELINE = __import__("os").environ.get("SCALING_PIPELINE", "fused")
 
 
 def main() -> None:
@@ -45,15 +33,9 @@ def main() -> None:
     )
     corpus = spark.read.parquet(corpus_dir)
     aliases = alias_dictionary(spark)
-    extract = (
-        triples_from_corpus_jvm if PIPELINE == "jvm" else triples_from_corpus
-    )
 
     def build():
-        # pytest-proven row-identical paths; the scaling-relevant
-        # difference is how many times document bytes are copied
-        # (fused: parquet→JVM→Arrow→Python; jvm: parquet→JVM only)
-        triples = extract(corpus)
+        triples = triples_from_corpus(corpus)
         linked = link_mentions(triples, aliases)
         edges = linked.select(
             F.col("subj").alias("subject"),
@@ -152,11 +134,10 @@ def main() -> None:
     # triple count for the throughput numerator (cheap second pass over
     # the cached-size corpus is NOT used — count the extracted triples
     # only once, untimed, for the report)
-    n_triples = extract(corpus).count()
+    n_triples = triples_from_corpus(corpus).count()
     print(
         json.dumps(
             {
-                "pipeline": PIPELINE,
                 "cores": cores,
                 "wall_sec": round(wall, 2),
                 "all_runs_sec": [round(w, 2) for w in walls],

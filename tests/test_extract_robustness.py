@@ -74,7 +74,12 @@ def test_fast_path_equals_stdlib_parser_on_pinned_cases():
                                b"<TITLE>t</title>", b"<pre>a  b</PRE>",
                                b"<p>&am</p>p;", b"<td>x</td>y</td>",
                                b"<p/><p></p>", b"<h1>x</h2>",
-                               b"<foo-bar>x</foo-bar><p>y</p>"]:
+                               b"<foo-bar>x</foo-bar><p>y</p>",
+                               # self-closing skip tags, NUL and the
+                               # U+001C-U+001F separators (Python \s)
+                               b"<nav/>Alpha binds Beta.</nav>",
+                               b'<nav a="b"/>Alpha binds Beta.</nav>',
+                               b"a\x00b", b"<p>a\x1cb</p>"]:
         src = html.decode("utf-8", errors="replace")
         fast = ex._fast_extract(src)
         if fast is None:

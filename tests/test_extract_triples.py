@@ -9,6 +9,9 @@
 
 from __future__ import annotations
 
+import random
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 from kg_microbe_merge_spark.functions.extract import (
@@ -17,6 +20,7 @@ from kg_microbe_merge_spark.functions.extract import (
 )
 from kg_microbe_merge_spark.functions.triples import (
     extract_triples_py,
+    triples_from_corpus,
     with_triples,
 )
 from kg_microbe_merge_spark.sources.corpus import (
@@ -157,3 +161,75 @@ def test_fused_triples_keeps_preextracted_text(spark):
     assert ("u1", "Alpha", "produces", "Beta") in rows
     assert ("u2", "Gamma", "inhibits", "Delta") in rows
     assert not any(u == "u3" for u, *_ in rows)
+
+
+# Hard inputs for the fused path: comments/PI/declarations, charrefs,
+# bogus end tags, '>' inside quoted attributes, nested or unclosed skip
+# containers, '<' in CDATA, invalid UTF-8, case-insensitive CDATA, Unicode
+# whitespace and empty blocks.
+_HARD_DOCS = [
+    b"<html><body><p>A <!-- comment --> B produces C.</p></body></html>",
+    b"<html><body><p>A&amp;B Alpha produces Beta.</p></body></html>",
+    b"<?xml version='1.0'?><p>Alpha produces Beta.</p>",
+    b"<!DOCTYPE html><p>Alpha produces Beta.</p>",
+    b"<p>Alpha binds Beta.</p></<p>bogus",
+    b'<p title="a>b">Alpha binds Beta.</p>',
+    b"<nav><nav>deep</nav>Alpha binds Beta.</nav><p>Gamma binds Delta.</p>",
+    b"<nav>unclosed <p>Alpha binds Beta.</p>",
+    b"<script>a < b</script><p>Alpha binds Beta.</p>",
+    b"< p>odd tag</ p><p>Alpha binds Beta.</p>",
+    b"<p class='single'>Alpha binds Beta.</p>",
+    b"\xff\xfe<p>Alpha binds Beta.</p>",
+    b"<script>if (a) go();</script><p>Alpha binds Beta.</p>",
+    b"<SCRIPT>x = 1;</SCRIPT><P>Alpha binds Beta.</P>",
+    b"<p>Alpha\n\t  binds \xc2\xa0 Beta.</p>",
+    b"<article><p>Alpha binds Beta.</p><p></p></article>",
+]
+
+
+def _fuzzed_docs() -> list[bytes]:
+    """Deterministic token-soup documents mixing well-formed and
+    malformed markup."""
+    rng = random.Random(20260821)
+    toks = [
+        "<p>", "</p>", "<div>", "</div>", "<nav>", "</nav>", "<script>",
+        "</script>", "<li>", "</li>", "<span>", "</span>", "<b>", "</b>",
+        "Alpha binds Beta. ", "Gamma produces Delta. ", "plain text ",
+        "the a of ", "<!-- c -->", "&amp;", "&", "<", ">", "</ p>",
+        '<a href="https://x.example/">L</a>', "<p/>", "<P>", "</P>",
+        "\n", "\t", "\xa0", "Entity_0001 inhibits Entity_0002. ",
+    ]
+    return [
+        "".join(rng.choice(toks) for _ in range(rng.randint(1, 30))).encode()
+        for _ in range(300)
+    ]
+
+
+def _mk_corpus(spark, htmls):
+    pdf = pd.DataFrame(
+        {
+            "url": [f"u{i}" for i in range(len(htmls))],
+            "warc_ts": pd.to_datetime([1700000000 + i for i in range(len(htmls))], unit="s"),
+            "html": htmls,
+            "text": pd.Series([None] * len(htmls), dtype=object),
+            "lang": ["en"] * len(htmls),
+        }
+    )
+    return spark.createDataFrame(
+        pdf,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+
+
+def test_fused_triples_equal_reference_on_hard_and_fuzzed_docs(spark):
+    """triples_from_corpus equals extract_triples_py(extract_text_py(h))
+    per url on malformed, adversarial and fuzzed html."""
+    docs = _HARD_DOCS + _fuzzed_docs()
+    fused = triples_from_corpus(_mk_corpus(spark, docs))
+    got = sorted(map(tuple, fused.collect()))
+    want = sorted(
+        (f"u{i}", s, p, o, c)
+        for i, h in enumerate(docs)
+        for s, p, o, c in extract_triples_py(extract_text_py(h))
+    )
+    assert got == want and want
