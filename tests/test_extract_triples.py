@@ -163,11 +163,10 @@ def test_fused_triples_keeps_preextracted_text(spark):
     assert not any(u == "u3" for u, *_ in rows)
 
 
-# Hard inputs for the fused path: comments/PI/declarations, charrefs,
-# bogus end tags, '>' inside quoted attributes, nested or unclosed skip
-# containers, '<' in CDATA, invalid UTF-8, case-insensitive CDATA, Unicode
-# whitespace and empty blocks.
-_HARD_DOCS = [
+# Adversarial inputs for the fused path: comments/PI/declarations,
+# charrefs, bogus end tags, '>' inside quoted attributes, nested or
+# unclosed skip containers, '<' in CDATA and invalid UTF-8.
+_ADVERSARIAL_DOCS = [
     b"<html><body><p>A <!-- comment --> B produces C.</p></body></html>",
     b"<html><body><p>A&amp;B Alpha produces Beta.</p></body></html>",
     b"<?xml version='1.0'?><p>Alpha produces Beta.</p>",
@@ -180,6 +179,11 @@ _HARD_DOCS = [
     b"< p>odd tag</ p><p>Alpha binds Beta.</p>",
     b"<p class='single'>Alpha binds Beta.</p>",
     b"\xff\xfe<p>Alpha binds Beta.</p>",
+]
+
+# Edge cases that look risky: script bodies without markup characters,
+# case-insensitive CDATA, Unicode whitespace and empty blocks.
+_EDGE_DOCS = [
     b"<script>if (a) go();</script><p>Alpha binds Beta.</p>",
     b"<SCRIPT>x = 1;</SCRIPT><P>Alpha binds Beta.</P>",
     b"<p>Alpha\n\t  binds \xc2\xa0 Beta.</p>",
@@ -221,10 +225,9 @@ def _mk_corpus(spark, htmls):
     )
 
 
-def test_fused_triples_equal_reference_on_hard_and_fuzzed_docs(spark):
+def _assert_fused_equals_reference(spark, docs):
     """triples_from_corpus equals extract_triples_py(extract_text_py(h))
-    per url on malformed, adversarial and fuzzed html."""
-    docs = _HARD_DOCS + _fuzzed_docs()
+    per url, and the documents assert at least one triple."""
     fused = triples_from_corpus(_mk_corpus(spark, docs))
     got = sorted(map(tuple, fused.collect()))
     want = sorted(
@@ -233,3 +236,15 @@ def test_fused_triples_equal_reference_on_hard_and_fuzzed_docs(spark):
         for s, p, o, c in extract_triples_py(extract_text_py(h))
     )
     assert got == want and want
+
+
+def test_fused_triples_equal_reference_on_adversarial_docs(spark):
+    _assert_fused_equals_reference(spark, _ADVERSARIAL_DOCS)
+
+
+def test_fused_triples_equal_reference_on_edge_docs(spark):
+    _assert_fused_equals_reference(spark, _EDGE_DOCS)
+
+
+def test_fused_triples_equal_reference_on_fuzzed_docs(spark):
+    _assert_fused_equals_reference(spark, _fuzzed_docs())
