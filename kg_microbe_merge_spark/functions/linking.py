@@ -65,12 +65,13 @@ def link_mentions(
 
 def same_as_candidates(aliases: DataFrame, min_prior: float = 0.0) -> DataFrame:
     """Cross-source equivalence candidates: two entity ids sharing an
-    alias are ``same_as`` candidates. Dictionary-sized self-join (small);
-    output feeds connected-components canonicalization."""
+    alias are ``same_as`` candidates. Dictionary-sized self-join, so one
+    side is broadcast (no shuffle before the join); output feeds
+    connected-components canonicalization."""
     a = aliases.filter(F.col("prior") >= min_prior).select("alias", "entity_id")
     b = a.withColumnRenamed("entity_id", "entity_id_b")
     return (
-        a.join(b, "alias")
+        a.join(F.broadcast(b), "alias")
         .filter(F.col("entity_id") < F.col("entity_id_b"))
         .select(
             F.col("entity_id").alias("src"),

@@ -1,6 +1,6 @@
-"""Distributed connected components over a ``same_as`` edge DataFrame.
+"""Connected components over a ``same_as`` edge DataFrame.
 
-Implements the alternating large-star / small-star algorithm of
+Large inputs run the alternating large-star / small-star algorithm of
 Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14),
 as pure DataFrame joins/aggregations — no GraphX/GraphFrames dependency.
 This replaces the reference's in-memory whole-graph merge
@@ -11,6 +11,14 @@ graph with a continent-sized component still terminates.
 
 Scale notes
 -----------
+* One bounded probe, ``limit(driver_threshold + 1).collect()``, picks
+  the solve. At most ``driver_threshold`` rows is broadcast-class data
+  (what Spark collects for a broadcast join): one driver-side union-find
+  over those rows, no second pass and no per-round jobs. ``same_as``
+  candidates self-join the alias dictionary, so the pipeline's graph
+  always fits (a 1,770-edge graph: ~15 s in star rounds, <1 s collected).
+* Larger inputs run the star rounds; the result is checkpointed eagerly
+  so a caller reading it twice never repeats the rounds.
 * Each round is two shuffles (groupBy min-neighbor + re-emit edges);
   AQE handles the heavy skew of hub nodes (a hub's neighbor list is
   aggregated with ``min``, which is partially aggregable map-side —
@@ -21,7 +29,6 @@ Scale notes
   share one stored copy at a cost of ONE job per round (on a real
   cluster use ``spark.sparkContext.setCheckpointDir`` + ``checkpoint``
   for fault-tolerant truncation).
-* Convergence check is a single ``count`` of changed labels per round.
 """
 
 from __future__ import annotations
@@ -31,9 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _canonical_edges(e: DataFrame) -> DataFrame:
     """Symmetrize, drop self-loops, dedup."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return sym.filter(F.col("src") != F.col("dst")).distinct()
 
@@ -73,11 +79,38 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _union_find(pairs) -> list[tuple]:
+    """Min-id ``(node, component)`` rows of a driver-held edge list. A
+    null endpoint yields one ``(None, None)`` row, as the star rounds do."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    has_null = False
+    for a, b in pairs:
+        has_null = has_null or a is None or b is None
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            # the smaller root wins, so every root is its set's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(x, find(x)) for x in parent] + ([(None, None)] if has_null else [])
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
+    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Return ``(node, component)`` where ``component`` is the minimum
     node id in each connected component.
@@ -85,16 +118,31 @@ def connected_components(
     Works for any orderable node type (string CURIEs included — min is
     lexicographic, which is all canonicalization needs: a stable,
     deterministic representative).
+
+    At most ``driver_threshold`` edges are solved on the driver, more by
+    up to ``max_iterations`` star rounds; both return the same rows, and
+    the result is materialized either way.
     """
+    probe = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    rows = probe.limit(driver_threshold + 1).collect()
+    if len(rows) > driver_threshold:
+        return _star_components(probe, max_iterations).localCheckpoint(eager=True)
+    t, nullable = probe.schema["src"].dataType, any(f.nullable for f in probe.schema)
+    fields = [T.StructField(c, t, nullable) for c in ("node", "component")]
+    return edges.sparkSession.createDataFrame(_union_find(rows), T.StructType(fields))
+
+
+def _star_components(raw: DataFrame, max_iterations: int) -> DataFrame:
+    """Distributed path of :func:`connected_components` over ``(src, dst)``:
+    large-star / small-star rounds until the edge set stops changing."""
     # node universe from the RAW edge list (before self-loop removal) so
     # nodes appearing only in self-loops still get a component (themselves)
-    raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     all_nodes = (
         raw.select(F.col("src").alias("node"))
         .union(raw.select(F.col("dst").alias("node")))
         .distinct()
     )
-    e = _canonical_edges(edges, src, dst)
+    e = _canonical_edges(raw)
 
     prev_checksum = None
     for i in range(max_iterations):
@@ -147,56 +195,6 @@ def connected_components(
     return roots.unionByName(missing_roots).distinct()
 
 
-def _quotient_components(
-    qe: DataFrame, max_iterations: int, driver_threshold: int
-) -> DataFrame:
-    """CC over the (already materialized, delta-sized) quotient edge
-    list. Below ``driver_threshold`` edges the quotient is
-    broadcast-class data — the same size class Spark itself collects to
-    the driver for a broadcast join — so it is solved with one
-    driver-side union-find pass (exact min-id labels, identical output)
-    instead of paying O(log d) distributed star-contraction rounds
-    whose per-round job/checkpoint overhead dominates at delta scale
-    (measured: a 1,770-edge quotient took ~15 s distributed, <1 s
-    collected). Above the threshold the distributed
-    :func:`connected_components` run is used unchanged."""
-    if qe.count() > driver_threshold:
-        return connected_components(qe, max_iterations=max_iterations).localCheckpoint(
-            eager=True
-        )
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in qe.collect():
-        a, b = row["src"], row["dst"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for x in parent:
-        r = find(x)
-        if r not in comp_min or x < comp_min[r]:
-            comp_min[r] = x
-    node_type = qe.schema["src"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("node", node_type, False),
-            T.StructField("component", node_type, False),
-        ]
-    )
-    rows = [(x, comp_min[find(x)]) for x in parent]
-    return qe.sparkSession.createDataFrame(rows, schema)
-
-
 def connected_components_incremental(
     assignment: DataFrame,
     delta_edges: DataFrame,
@@ -229,15 +227,11 @@ def connected_components_incremental(
     (2) remap the components that merged. Everything else — the
     quotient graph (old roots of delta endpoints + brand-new ids) and
     the CC run over it — is proportional to the DELTA, not the graph.
-    The quotient solve is hybrid: at ≤ ``driver_threshold`` edges it is
-    broadcast-class data (a 10^6-edge daily delta is ~tens of MB — the
-    size class Spark collects for broadcast joins) and one driver-side
-    union-find replaces O(log d) star-contraction rounds of per-round
-    job overhead; larger quotients take the distributed
-    :func:`connected_components` path unchanged. Correctness of min-id
-    composition: each old root is the minimum of its old component, so
-    the quotient minimum equals the global minimum of the merged
-    component.
+    The quotient goes through :func:`connected_components`, so a
+    10^6-edge daily delta (~tens of MB) is solved on the driver.
+    Correctness of min-id composition: each old root is the minimum of
+    its old component, so the quotient minimum equals the global minimum
+    of the merged component.
     """
     raw = (
         delta_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -283,10 +277,12 @@ def connected_components_incremental(
         )
         .select(F.col("_sr").alias("src"), F.col("_dr").alias("dst"))
     )
-    # Delta-sized and consumed by two branches (remap + new rows):
-    # materialize once and truncate the quotient-run lineage.
+    # Delta-sized, read by the probe and (above the threshold) the star
+    # rounds: materialize once and truncate the lineage.
     qe = qe.localCheckpoint(eager=True)
-    qcc = _quotient_components(qe, max_iterations, driver_threshold)
+    qcc = connected_components(
+        qe, max_iterations=max_iterations, driver_threshold=driver_threshold
+    )
     # Broadcast join #2: remap merged components across the full
     # assignment. `moved` is at most one row per quotient node.
     moved = qcc.filter(F.col("node") != F.col("component")).select(

@@ -1,20 +1,30 @@
 """Connected-components correctness vs a networkx oracle on seeded
 random graphs plus adversarial topologies (long chain — worst case for
 propagation depth; star — worst case for hub skew; mixed forest).
+
+Every oracle check runs both solve paths: the driver-side union-find
+that inputs below the default ``driver_threshold`` take, and the
+distributed star rounds, forced with ``driver_threshold=0``.
 """
 
 from __future__ import annotations
 
+import functools
 import random
+import uuid
+from collections import Counter
 
 import networkx as nx
 import pytest
 
+from kg_microbe_merge_spark.operators import components
 from kg_microbe_merge_spark.operators.components import (
     canonicalize_ids,
     connected_components,
     connected_components_incremental,
 )
+
+THRESHOLDS = (2_000_000, 0)
 
 
 def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -30,8 +40,11 @@ def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
 
 def _check(spark, edges: list[tuple[str, str]]) -> None:
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert got == _oracle(edges)
+    for threshold in THRESHOLDS:
+        rows = connected_components(df, driver_threshold=threshold).collect()
+        got = {r["node"]: r["component"] for r in rows}
+        assert got == _oracle(edges), f"driver_threshold={threshold}"
+        assert len(rows) == len(got), f"driver_threshold={threshold}"
 
 
 def test_cc_long_chain(spark):
@@ -48,9 +61,48 @@ def test_cc_star(spark):
 def test_cc_self_loops_and_dups(spark):
     edges = [("a", "a"), ("a", "b"), ("b", "a"), ("a", "b"), ("c", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    # self-loop-only node 'c' still appears, mapped to itself
-    assert got == {"a": "a", "b": "a", "c": "c"}
+    for threshold in THRESHOLDS:
+        rows = connected_components(df, driver_threshold=threshold).collect()
+        # self-loop-only node 'c' still appears, mapped to itself; one
+        # row per node despite the duplicate edges
+        assert sorted(map(tuple, rows)) == [("a", "a"), ("b", "a"), ("c", "c")]
+
+
+def test_cc_null_endpoints_same_on_both_paths(spark):
+    """A null endpoint admits the other endpoint as a node, and all null
+    endpoints together give exactly one (None, None) row, on both paths."""
+    edges = [("a", None), (None, "b"), ("b", "c"), (None, None), ("d", "d")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = Counter([(None, None), ("a", "a"), ("b", "b"), ("c", "b"), ("d", "d")])
+    for threshold in THRESHOLDS:
+        got = Counter(
+            map(tuple, connected_components(df, driver_threshold=threshold).collect())
+        )
+        assert got == want, f"driver_threshold={threshold}"
+
+
+def test_cc_job_count_on_dictionary_sized_graph(spark):
+    """A ``same_as``-shaped graph (500 disjoint pairs, as the alias
+    dictionary self-join yields) is solved on the driver in a few jobs;
+    the star rounds need one job per round on top."""
+    edges = [(f"E:{i:04d}a", f"E:{i:04d}b") for i in range(500)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    sc = spark.sparkContext
+
+    def jobs(**kw) -> int:
+        group = f"cc-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            rows = connected_components(df, **kw).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 1000
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    driver_jobs = jobs()
+    assert driver_jobs <= 3
+    assert jobs(driver_threshold=0) > driver_jobs
 
 
 @pytest.mark.parametrize("seed", [1, 7])
@@ -139,13 +191,22 @@ def test_cc_incremental_assignment_never_shuffled(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_canonicalize_ids(spark):
+def test_canonicalize_ids(spark, monkeypatch):
     nodes = spark.createDataFrame(
         [("A:1", "x"), ("B:1", "y"), ("C:9", "z")], "id string, name string"
     )
     same_as = spark.createDataFrame([("A:1", "B:1")], "src string, dst string")
-    out = {r["id"]: r["canonical_id"] for r in canonicalize_ids(nodes, same_as).collect()}
-    assert out == {"A:1": "A:1", "B:1": "A:1", "C:9": "C:9"}
+    for threshold in THRESHOLDS:
+        monkeypatch.setattr(
+            components,
+            "connected_components",
+            functools.partial(connected_components, driver_threshold=threshold),
+        )
+        out = {
+            r["id"]: r["canonical_id"]
+            for r in canonicalize_ids(nodes, same_as).collect()
+        }
+        assert out == {"A:1": "A:1", "B:1": "A:1", "C:9": "C:9"}, threshold
 
 
 def test_incremental_cc_gate_assignment(spark):
@@ -153,7 +214,6 @@ def test_incremental_cc_gate_assignment(spark):
     directly (one groupBy over the customer-nation star) instead of
     re-running the full CC as setup; the two must be byte-identical,
     else the incremental fold starts from wrong labels."""
-    import __spark_entry__ as e
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
