@@ -3,13 +3,13 @@ random graphs plus adversarial topologies (long chain — worst case for
 propagation depth; star — worst case for hub skew; mixed forest).
 
 Every oracle check runs both solve paths: the driver-side union-find
-that inputs below the default ``driver_threshold`` take, and the
-distributed star rounds, forced with ``driver_threshold=0``.
+that inputs up to ``components._DRIVER_THRESHOLD`` edges take, and the
+distributed star rounds, forced by patching that threshold to 0.
 """
 
 from __future__ import annotations
 
-import functools
+import contextlib
 import random
 import uuid
 from collections import Counter
@@ -24,7 +24,15 @@ from kg_microbe_merge_spark.operators.components import (
     connected_components_incremental,
 )
 
-THRESHOLDS = (2_000_000, 0)
+THRESHOLDS = (components._DRIVER_THRESHOLD, 0)
+
+
+@contextlib.contextmanager
+def _driver_threshold(threshold: int):
+    """Solve with ``threshold`` as the driver/star cut-over."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "_DRIVER_THRESHOLD", threshold)
+        yield
 
 
 def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -41,10 +49,11 @@ def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
 def _check(spark, edges: list[tuple[str, str]]) -> None:
     df = spark.createDataFrame(edges, "src string, dst string")
     for threshold in THRESHOLDS:
-        rows = connected_components(df, driver_threshold=threshold).collect()
+        with _driver_threshold(threshold):
+            rows = connected_components(df).collect()
         got = {r["node"]: r["component"] for r in rows}
-        assert got == _oracle(edges), f"driver_threshold={threshold}"
-        assert len(rows) == len(got), f"driver_threshold={threshold}"
+        assert got == _oracle(edges), f"threshold={threshold}"
+        assert len(rows) == len(got), f"threshold={threshold}"
 
 
 def test_cc_long_chain(spark):
@@ -62,7 +71,8 @@ def test_cc_self_loops_and_dups(spark):
     edges = [("a", "a"), ("a", "b"), ("b", "a"), ("a", "b"), ("c", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
     for threshold in THRESHOLDS:
-        rows = connected_components(df, driver_threshold=threshold).collect()
+        with _driver_threshold(threshold):
+            rows = connected_components(df).collect()
         # self-loop-only node 'c' still appears, mapped to itself; one
         # row per node despite the duplicate edges
         assert sorted(map(tuple, rows)) == [("a", "a"), ("b", "a"), ("c", "c")]
@@ -75,10 +85,9 @@ def test_cc_null_endpoints_same_on_both_paths(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     want = Counter([(None, None), ("a", "a"), ("b", "b"), ("c", "b"), ("d", "d")])
     for threshold in THRESHOLDS:
-        got = Counter(
-            map(tuple, connected_components(df, driver_threshold=threshold).collect())
-        )
-        assert got == want, f"driver_threshold={threshold}"
+        with _driver_threshold(threshold):
+            got = Counter(map(tuple, connected_components(df).collect()))
+        assert got == want, f"threshold={threshold}"
 
 
 def test_cc_job_count_on_dictionary_sized_graph(spark):
@@ -89,11 +98,11 @@ def test_cc_job_count_on_dictionary_sized_graph(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     sc = spark.sparkContext
 
-    def jobs(**kw) -> int:
+    def jobs() -> int:
         group = f"cc-jobs-{uuid.uuid4()}"
         sc.setJobGroup(group, "connected_components job count")
         try:
-            rows = connected_components(df, **kw).collect()
+            rows = connected_components(df).collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(rows) == 1000
@@ -102,7 +111,8 @@ def test_cc_job_count_on_dictionary_sized_graph(spark):
 
     driver_jobs = jobs()
     assert driver_jobs <= 3
-    assert jobs(driver_threshold=0) > driver_jobs
+    with _driver_threshold(0):
+        assert jobs() > driver_jobs
 
 
 @pytest.mark.parametrize("seed", [1, 7])
@@ -124,19 +134,16 @@ def _inc_check(spark, old_edges, delta_edges):
     """Invariant: incremental(cc(E0), E1) == cc(E0 ∪ E1) — checked on
     BOTH quotient solvers (driver-side union-find, the default at delta
     size, and the distributed star-contraction fallback forced with
-    driver_threshold=0)."""
+    a threshold of 0)."""
     assignment = connected_components(_edges_df(spark, old_edges))
     want = _oracle(old_edges + delta_edges)
-    for threshold in (2_000_000, 0):
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components_incremental(
-                assignment,
-                _edges_df(spark, delta_edges),
-                driver_threshold=threshold,
+    for threshold in THRESHOLDS:
+        with _driver_threshold(threshold):
+            rows = connected_components_incremental(
+                assignment, _edges_df(spark, delta_edges)
             ).collect()
-        }
-        assert got == want, f"driver_threshold={threshold}"
+        got = {r["node"]: r["component"] for r in rows}
+        assert got == want, f"threshold={threshold}"
         # and exactly one row per node
         assert len(got) == len(want)
 
@@ -191,21 +198,15 @@ def test_cc_incremental_assignment_never_shuffled(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_canonicalize_ids(spark, monkeypatch):
+def test_canonicalize_ids(spark):
     nodes = spark.createDataFrame(
         [("A:1", "x"), ("B:1", "y"), ("C:9", "z")], "id string, name string"
     )
     same_as = spark.createDataFrame([("A:1", "B:1")], "src string, dst string")
     for threshold in THRESHOLDS:
-        monkeypatch.setattr(
-            components,
-            "connected_components",
-            functools.partial(connected_components, driver_threshold=threshold),
-        )
-        out = {
-            r["id"]: r["canonical_id"]
-            for r in canonicalize_ids(nodes, same_as).collect()
-        }
+        with _driver_threshold(threshold):
+            rows = canonicalize_ids(nodes, same_as).collect()
+        out = {r["id"]: r["canonical_id"] for r in rows}
         assert out == {"A:1": "A:1", "B:1": "A:1", "C:9": "C:9"}, threshold
 
 
