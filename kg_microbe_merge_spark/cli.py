@@ -27,6 +27,22 @@ import os
 from .session import get_spark
 
 
+def _read_kg(spark, kg_dir: str, *names: str):
+    """Read the first merged-KG table in ``kg_dir`` named one of
+    ``names``: the ``--single-file`` TSV (``<name>.tsv``) or the default
+    distributed part directory (``<name>/``)."""
+    from .sources.kgx import read_kgx_tsv
+
+    for name in names:
+        for path in (os.path.join(kg_dir, name + ".tsv"), os.path.join(kg_dir, name)):
+            if os.path.exists(path):
+                return read_kgx_tsv(spark, [path])
+    raise SystemExit(f"no {' or '.join(names)} TSV or part directory in {kg_dir}")
+
+
+_EDGES = ("merged_kg_edges_full", "merged_kg_edges")
+
+
 def _cmd_merge(args: argparse.Namespace) -> None:
     from .operators.merge import (
         coverage_check,
@@ -147,20 +163,15 @@ def _cmd_coverage(args: argparse.Namespace) -> None:
 
 
 def _cmd_sql(args: argparse.Namespace) -> None:
-    from .plans.sqlapi import register_kg_views, register_testdata_views
-    from .sources.kgx import read_kgx_tsv
+    from .plans.sqlapi import register_kg_views
 
     spark = get_spark(app_name="kg-sql")
     if args.kg_dir:
-        nodes_tsv = os.path.join(args.kg_dir, "merged_kg_nodes.tsv")
-        edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges_full.tsv")
         register_kg_views(
             spark,
-            nodes=read_kgx_tsv(spark, [nodes_tsv]) if os.path.exists(nodes_tsv) else None,
-            edges=read_kgx_tsv(spark, [edges_tsv]) if os.path.exists(edges_tsv) else None,
+            nodes=_read_kg(spark, args.kg_dir, "merged_kg_nodes"),
+            edges=_read_kg(spark, args.kg_dir, *_EDGES),
         )
-    if args.testdata_dir:
-        register_testdata_views(spark, args.testdata_dir)
     spark.sql(args.query).show(args.limit, truncate=False)
 
 
@@ -169,15 +180,10 @@ def _cmd_cypher(args: argparse.Namespace) -> None:
     the reference's kg-chat Neo4j passthrough (reference
     run.py:276-381) without a Neo4j server."""
     from .plans.cypher import cypher_query
-    from .sources.kgx import read_kgx_tsv
 
     spark = get_spark(app_name="kg-cypher")
-    nodes_tsv = os.path.join(args.kg_dir, "merged_kg_nodes.tsv")
-    edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges_full.tsv")
-    if not os.path.exists(edges_tsv):
-        edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges.tsv")
-    nodes = read_kgx_tsv(spark, [nodes_tsv])
-    edges = read_kgx_tsv(spark, [edges_tsv])
+    nodes = _read_kg(spark, args.kg_dir, "merged_kg_nodes")
+    edges = _read_kg(spark, args.kg_dir, *_EDGES)
     cypher_query(nodes, edges, args.query).show(args.limit, truncate=False)
 
 
@@ -207,15 +213,12 @@ def _cmd_sparql(args: argparse.Namespace) -> None:
         bgp_describe,
         bgp_query,
     )
-    from .sources.kgx import read_kgx_tsv, write_tsv_single
+    from .sources.kgx import write_tsv_single
 
     with open(args.query_file) as fh:
         q = yaml.safe_load(fh)
     spark = get_spark(app_name="kg-sparql")
-    edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges_full.tsv")
-    if not os.path.exists(edges_tsv):
-        edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges.tsv")
-    edges = read_kgx_tsv(spark, [edges_tsv])
+    edges = _read_kg(spark, args.kg_dir, *_EDGES)
 
     def tup(block):
         return [tuple(p) for p in block] if block else None
@@ -266,7 +269,6 @@ def _cmd_export_rdf(args: argparse.Namespace) -> None:
     """Export a merged KG as RDF N-Triples (sources/rdf.py) — the
     interchange format of the SPARQL world the reference queries
     (reference query.py:9-23)."""
-    from .sources.kgx import read_kgx_tsv
     from .sources.rdf import (
         edges_to_ntriples,
         nodes_to_ntriples,
@@ -274,14 +276,10 @@ def _cmd_export_rdf(args: argparse.Namespace) -> None:
     )
 
     spark = get_spark(app_name="kg-export-rdf")
-    nodes_tsv = os.path.join(args.kg_dir, "merged_kg_nodes.tsv")
-    edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges_full.tsv")
-    if not os.path.exists(edges_tsv):
-        edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges.tsv")
-    triples = edges_to_ntriples(
-        read_kgx_tsv(spark, [edges_tsv]), args.base
-    ).unionByName(
-        nodes_to_ntriples(read_kgx_tsv(spark, [nodes_tsv]), args.base)
+    edges = _read_kg(spark, args.kg_dir, *_EDGES)
+    nodes = _read_kg(spark, args.kg_dir, "merged_kg_nodes")
+    triples = edges_to_ntriples(edges, args.base).unionByName(
+        nodes_to_ntriples(nodes, args.base)
     )
     write_ntriples(triples, args.output, single_file=args.single_file)
     print(f"wrote N-Triples to {args.output}")
@@ -301,10 +299,7 @@ def _cmd_entail(args: argparse.Namespace) -> None:
     from .sources.kgx import read_kgx_tsv, write_tsv_dir, write_tsv_single
 
     spark = get_spark(app_name="kg-entail")
-    edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges_full.tsv")
-    if not os.path.exists(edges_tsv):
-        edges_tsv = os.path.join(args.kg_dir, "merged_kg_edges.tsv")
-    triples = read_kgx_tsv(spark, [edges_tsv]).select(
+    triples = _read_kg(spark, args.kg_dir, *_EDGES).select(
         "subject", "predicate", "object"
     )
     if args.tbox:
@@ -439,8 +434,9 @@ def main(argv: list[str] | None = None) -> None:
     )
     cy.add_argument("query")
     cy.add_argument("--kg-dir", required=True,
-                    help="directory with merged_kg_nodes.tsv / "
-                         "merged_kg_edges[_full].tsv")
+                    help="merge output directory: merged_kg_nodes and "
+                         "merged_kg_edges[_full], as .tsv files or part "
+                         "directories")
     cy.add_argument("--limit", type=int, default=50)
     cy.set_defaults(fn=_cmd_cypher)
 
@@ -506,7 +502,6 @@ def main(argv: list[str] | None = None) -> None:
     s = sub.add_parser("sql", help="ad-hoc SQL over a merged KG")
     s.add_argument("query")
     s.add_argument("--kg-dir", default=None)
-    s.add_argument("--testdata-dir", default=None)
     s.add_argument("--limit", type=int, default=20)
     s.set_defaults(fn=_cmd_sql)
 

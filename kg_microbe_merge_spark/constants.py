@@ -1,40 +1,12 @@
 """Canonical KGX schema constants.
 
 Parity notes (reference, behavior only):
-- 14-column node header: /root/reference/tests/data/test_nodes_1.tsv:1
-  (the reference's constants.py:9-23 omits ``iri`` — schema drift; per
-  SURVEY.md §1.1 we keep the data's 14 columns).
-- 5-column edge schema: /root/reference/kg_microbe_merge/constants.py:24
-  and tests/data/test_edges_1.tsv:1 (``knowledge_source`` header variant;
+- Edge key and payload columns: kg_microbe_merge/constants.py:24 and
+  tests/data/test_edges_1.tsv:1 (``knowledge_source`` header variant;
   the optional uuid ``id`` column of test_edges_2.tsv is dropped at load,
   cf. utils/duckdb_utils.py:432).
 - Prefix→Biolink category map: utils/edge_vs_node_check.py:7-20.
 """
-
-NODES_COLUMNS = [
-    "id",
-    "category",
-    "name",
-    "description",
-    "xref",
-    "provided_by",
-    "synonym",
-    "iri",
-    "object",
-    "predicate",
-    "relation",
-    "same_as",
-    "subject",
-    "subsets",
-]
-
-EDGES_COLUMNS = [
-    "subject",
-    "predicate",
-    "object",
-    "relation",
-    "knowledge_source",
-]
 
 EDGE_KEY_COLUMNS = ["subject", "predicate", "object"]
 EDGE_PAYLOAD_COLUMNS = ["relation", "knowledge_source"]

@@ -49,11 +49,6 @@ def hash60_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def hash60_seeded_sql(expr: str, seed: int) -> str:
-    """DuckDB twin of :func:`hash60_seeded`."""
-    return hash60_sql(f"({expr})::VARCHAR || ':{seed}'")
-
-
 def hash60_py(value: str) -> int:
     """Python twin (for pandas-UDF code paths and tests)."""
     import hashlib

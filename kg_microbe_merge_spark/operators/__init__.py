@@ -1,63 +1,5 @@
-from . import (  # noqa: F401
-    asof,
-    betweenness,
-    bfs,
-    blocking,
-    bloom,
-    bm25,
-    bpe,
-    chunking,
-    closure,
-    collocations,
-    coloring,
-    components,
-    dbscan,
-    dedup,
-    densest,
-    diff,
-    frontier,
-    guards,
-    history,
-    hits,
-    hyperball,
-    katz,
-    kcore,
-    kmeans,
-    kmv,
-    labelprop,
-    layout,
-    linkpred,
-    merge,
-    metablocking,
-    mis,
-    mixing,
-    multimodal,
-    negatives,
-    ngram_lm,
-    packing,
-    pagerank,
-    ppjoin,
-    pq,
-    projection,
-    quantize,
-    robots,
-    scc,
-    semdedup,
-    sharding,
-    similarity,
-    sketches,
-    skew,
-    split,
-    stats,
-    suffix,
-    tfidf,
-    triangles,
-    truss,
-    unigram_lm,
-    upsert,
-    validate,
-    vocab,
-    walks,
-    winnow,
-    wl,
-)
+"""DataFrame operators: the KGX merge, upsert folds, connected components,
+entailment and closure, graph stats, splits and training-set mixing, and
+the dedup, retrieval and graph-analytics operators of the driver contract
+(``__spark_entry__.py``). Import submodules directly; this package imports
+nothing."""

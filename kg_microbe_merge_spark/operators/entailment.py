@@ -120,16 +120,6 @@ def _closure_pairs_py(pairs: list[tuple]) -> list[tuple]:
     return sorted(out)
 
 
-def _tbox_closure_df(pairs_df: DataFrame) -> DataFrame:
-    """(src, dst) closure of a TBox-sized relation, computed driver-
-    side (see :func:`_closure_pairs_py`) and returned as a DataFrame
-    for the broadcast rule joins."""
-    rows = [(r["src"], r["dst"]) for r in pairs_df.collect()]
-    return pairs_df.sparkSession.createDataFrame(
-        _closure_pairs_py(rows), "src string, dst string"
-    )
-
-
 def _tbox_rows(tb: DataFrame) -> list[tuple[str, str, str]]:
     """Collect the TBox ONCE (it is broadcast-class by contract —
     every rule join broadcasts relations derived from it anyway).

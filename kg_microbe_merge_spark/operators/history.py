@@ -51,10 +51,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: sentinel batch for "still current" (NULL in storage)
-VALID_TO_OPEN = None
-
-
 def scd2_init(delta: DataFrame, key_col: str, tracked_cols: Sequence[str],
               batch_id: int) -> DataFrame:
     """History table from the first batch: every row current."""

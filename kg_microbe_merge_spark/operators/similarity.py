@@ -40,11 +40,6 @@ def norm_expr(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity of two double arrays (cast upstream)."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 

@@ -1,1 +1,3 @@
-from . import bgp, cypher, materialize, pipeline, sqlapi  # noqa: F401
+"""Plans over the operators: the resumable web-KG pipeline, BGP/SPARQL,
+Cypher and SQL query surfaces, bucketed materialization. Import submodules
+directly; this package imports nothing."""

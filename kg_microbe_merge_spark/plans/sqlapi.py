@@ -2,18 +2,13 @@
 commands (Q2, run.py:276-381 behavior): ad-hoc SQL over the merged KG.
 
 The reference shells out to DuckDB/Neo4j; here the engine IS the SQL
-engine — register the node/edge DataFrames (or a testdata directory) as
-temp views and run ``spark.sql``.
+engine — register the node/edge DataFrames as temp views and run
+``spark.sql``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def register_kg_views(
@@ -29,12 +24,6 @@ def register_kg_views(
         nodes.createOrReplaceTempView(nodes_name)
     if edges is not None:
         edges.createOrReplaceTempView(edges_name)
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver-testdata parquet tables as temp views."""
-    for t in TESTDATA_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
 def query(spark: SparkSession, sql: str) -> DataFrame:

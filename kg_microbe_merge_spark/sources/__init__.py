@@ -1,1 +1,3 @@
-from . import corpus, files, jsonl, kgx, rdf  # noqa: F401
+"""Readers and writers: KGX TSV, RDF, JSONL, merge input discovery, the
+seeded synthetic corpus. Import submodules directly; this package imports
+nothing."""

@@ -30,7 +30,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.triples import VERB_LEXICON
@@ -197,9 +196,3 @@ def alias_dictionary(spark: SparkSession) -> DataFrame:
         if i % 10 == 0:
             rows.append((surf, f"SRCB:{(i + 1) % N_ENTITIES:04d}", 0.1))
     return spark.createDataFrame(rows, "alias string, entity_id string, prior double")
-
-
-def same_as_ground_truth(spark: SparkSession) -> DataFrame:
-    """True equivalences: SRCA:i ↔ SRCB:i for every entity."""
-    rows = [(f"SRCA:{i:04d}", f"SRCB:{i:04d}") for i in range(N_ENTITIES)]
-    return spark.createDataFrame(rows, "src string, dst string")

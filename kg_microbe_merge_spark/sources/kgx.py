@@ -34,11 +34,19 @@ def _probe_header(spark: SparkSession, path: str) -> list[str]:
     the Spark analogue of the reference's ``LIMIT 0`` probe
     (utils/duckdb_utils.py:232). Local paths read the first line
     directly (no Spark job per file — with thousands of source files
-    the per-file job launch would dominate); non-local URIs fall back
-    to a 1-partition textFile."""
+    the per-file job launch would dominate); a local part directory
+    (a distributed TSV sink's output, every part file headed) is probed
+    through its first ``part-*`` file. Non-local URIs fall back to a
+    1-partition textFile."""
+    import glob
     import os
 
     local = path[7:] if path.startswith("file://") else path
+    if os.path.isdir(local):
+        parts = sorted(glob.glob(os.path.join(local, "part-*")))
+        if not parts:
+            raise ValueError(f"KGX TSV directory has no part files: {path}")
+        local = parts[0]
     if os.path.exists(local):
         with open(local, newline="") as f:
             line = f.readline().rstrip("\r\n")

@@ -1,10 +1,3 @@
-from . import (  # noqa: F401
-    curation,
-    dedup_index,
-    ingest,
-    joins,
-    maintain,
-    politeness,
-    sessions,
-    stateful,
-)
+"""Structured Streaming ingestion and incremental maintenance of the
+events table and the merged KG. Import submodules directly; this package
+imports nothing."""

@@ -1,12 +1,16 @@
 """CLI + file-utils surface: transform-dir discovery, priority
 auto-discovery, end-to-end merge command writing the reference's output
-files, tar round-trip, SQL passthrough, multimodal plumbing.
+files, tar round-trip, SQL passthrough, multimodal plumbing, and one
+end-to-end run of every CLI subcommand.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import tarfile
+
+import pytest
 
 from kg_microbe_merge_spark.operators.multimodal import (
     generate_media,
@@ -211,17 +215,11 @@ def test_cli_merge_distributed_tar_contains_part_dirs(spark, tmp_path):
 
 
 def test_sql_passthrough(spark):
-    from kg_microbe_merge_spark.plans.sqlapi import (
-        query,
-        register_kg_views,
-        register_testdata_views,
-    )
+    from kg_microbe_merge_spark.plans.sqlapi import query, register_kg_views
 
     nodes = spark.createDataFrame([("X:1", "n")], "id string, name string")
     register_kg_views(spark, nodes=nodes)
     assert query(spark, "SELECT count(*) AS n FROM nodes").first()["n"] == 1
-    register_testdata_views(spark, "/root/testdata/sf0.001")
-    assert query(spark, "SELECT count(*) AS n FROM region").first()["n"] == 5
 
 
 def test_multimodal_plumbing(spark):
@@ -428,6 +426,120 @@ def test_cli_sparql_end_to_end(spark, tmp_path, capsys):
     )
     main(["sparql", "--kg-dir", out, "--query-file", str(qf3)])
     assert "True" in capsys.readouterr().out
+
+
+@pytest.fixture(scope="module")
+def merged_kgs(spark, tmp_path_factory):
+    """One KG merged twice from the same transform dir: with the default
+    distributed sink (part directories) and with ``--single-file``."""
+    from kg_microbe_merge_spark.cli import main
+
+    tmp = tmp_path_factory.mktemp("merged_kgs")
+    base = _make_transform_dir(tmp)
+    out = {"distributed": str(tmp / "kg_dist"), "single": str(tmp / "kg_single")}
+    main(["merge", "--transform-dir", base, "--output", out["distributed"]])
+    main(["merge", "--transform-dir", base, "--output", out["single"],
+          "--single-file"])
+    return out
+
+
+def test_cli_query_subcommands_read_distributed_merge_output(
+    spark, tmp_path, capsys, merged_kgs
+):
+    """Every ``--kg-dir`` subcommand reads the part directories that a
+    default (distributed-sink) ``merge`` writes."""
+    from kg_microbe_merge_spark.cli import main
+    from kg_microbe_merge_spark.sources.rdf import RDFS_LABEL, read_ntriples
+
+    kg = merged_kgs["distributed"]
+    assert os.path.isdir(os.path.join(kg, "merged_kg_nodes"))
+    capsys.readouterr()
+
+    main(["cypher", "--kg-dir", kg,
+          "MATCH (a)-[:related_to]->(b:B) RETURN a.name AS who"])
+    assert "name-priority" in capsys.readouterr().out
+
+    main(["sql", "--kg-dir", kg,
+          "SELECT concat('n=', count(*)) AS c FROM nodes "
+          "UNION ALL SELECT concat('e=', count(*)) FROM edges"])
+    printed = capsys.readouterr().out
+    assert "n=2" in printed and "e=2" in printed
+
+    qf = tmp_path / "q.yaml"
+    qf.write_text("patterns:\n  - ['?s', 'biolink:related_to', '?o']\n"
+                  "select: ['?o']\norder_by: ['?o']\n")
+    res = str(tmp_path / "res.tsv")
+    main(["sparql", "--kg-dir", kg, "--query-file", str(qf), "--output", res])
+    assert open(res).read().split() == ["o", "EC:9.9.9.9", "X:2"]
+
+    nt = str(tmp_path / "kg_nt")
+    main(["export-rdf", "--kg-dir", kg, "--output", nt, "--single-file"])
+    b = "https://kg.example/"
+    rows = {(r["subject"], r["predicate"], r["object"])
+            for r in read_ntriples(spark, nt).collect()}
+    assert (f"{b}X:1", f"{b}biolink:related_to", f"{b}X:2") in rows
+    assert (f"{b}X:1", RDFS_LABEL, "name-priority") in rows
+
+    ent = str(tmp_path / "entailed.tsv")
+    main(["entail", "--kg-dir", kg, "--output", ent, "--single-file"])
+    got = sorted(open(ent).read().strip().split("\n")[1:])
+    assert got == ["X:1\tbiolink:related_to\tEC:9.9.9.9",
+                   "X:1\tbiolink:related_to\tX:2"]
+
+
+def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
+    import json
+
+    from kg_microbe_merge_spark.cli import main
+    from kg_microbe_merge_spark.plans.pipeline import MANIFEST_NAME
+
+    wd = str(tmp_path / "run")
+    main(["pipeline", "--work-dir", wd, "--n-docs", "40", "--seed", "1"])
+    counts = ast.literal_eval(capsys.readouterr().out.strip().splitlines()[-1])
+    assert counts["corpus"] == 40
+    assert counts["nodes"] > 0 and counts["edges"] > 0
+    with open(os.path.join(wd, MANIFEST_NAME)) as f:
+        committed = set(json.load(f))
+    assert {"corpus", "triples", "components", "kgx_nodes"} <= committed
+
+
+def test_cli_coverage_end_to_end(spark, tmp_path, capsys):
+    from kg_microbe_merge_spark.cli import main
+
+    nodes = tmp_path / "nodes.tsv"
+    edges = tmp_path / "edges.tsv"
+    nodes.write_text(NODES_TSV)
+    edges.write_text(EDGES_TSV)
+    out = str(tmp_path / "missing.tsv")
+    main(["coverage", "--nodes", str(nodes), "--edges", str(edges),
+          "--output", out])
+    assert "1 missing endpoints" in capsys.readouterr().out
+    lines = open(out).read().strip().split("\n")
+    assert len(lines) == 2 and "EC:9.9.9.9\tbiolink:Enzyme" in lines[1]
+
+
+def test_cli_cypher_end_to_end(spark, capsys, merged_kgs):
+    from kg_microbe_merge_spark.cli import main
+
+    capsys.readouterr()
+    main(["cypher", "--kg-dir", merged_kgs["single"],
+          "MATCH (a:A)-[r]->(b) RETURN b.id AS target ORDER BY target"])
+    printed = capsys.readouterr().out
+    assert printed.index("EC:9.9.9.9") < printed.index("X:2")
+    assert "X:1" not in printed
+
+
+def test_cli_sql_end_to_end(spark, capsys, merged_kgs):
+    from kg_microbe_merge_spark.cli import main
+
+    capsys.readouterr()
+    main(["sql", "--kg-dir", merged_kgs["single"],
+          "SELECT n.name AS who, count(*) AS n_out FROM edges e "
+          "JOIN nodes n ON e.subject = n.id GROUP BY n.name"])
+    printed = capsys.readouterr().out
+    assert "name-priority" in printed and "name-b" not in printed
+    row = next(line for line in printed.splitlines() if "name-priority" in line)
+    assert row.split("|")[2].strip() == "2"
 
 
 def test_cli_holdouts_end_to_end(spark, tmp_path):
