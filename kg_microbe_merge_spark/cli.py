@@ -143,11 +143,13 @@ def _cmd_merge(args: argparse.Namespace) -> None:
 
 
 def _cmd_pipeline(args: argparse.Namespace) -> None:
-    from .plans.pipeline import run_pipeline
+    from .plans.pipeline import OUTPUT_STAGES, PipelineRun, run_pipeline
 
     spark = get_spark(app_name="kg-pipeline")
-    out = run_pipeline(spark, args.work_dir, n_docs=args.n_docs, seed=args.seed)
-    print({k: v.count() for k, v in out.items()})
+    run_pipeline(spark, args.work_dir, n_docs=args.n_docs, seed=args.seed)
+    # row counts as committed: the manifest, not a re-scan of each output
+    manifest = PipelineRun(spark, args.work_dir).manifest
+    print({k: manifest[stage]["rows"] for k, stage in OUTPUT_STAGES.items()})
 
 
 def _cmd_coverage(args: argparse.Namespace) -> None:

@@ -15,10 +15,15 @@ protocol — write to _tmp, atomic rename, manifest append — mirrors a
 table-format commit). The reference's analogue is the never-enabled
 ``checkpoint`` config flag (merge_schema.yaml:28-29).
 
-Lineage metrics: every stage also writes ``_metrics/<stage>.parquet``
-with one row per partition: ``F.spark_partition_id()``, row count,
-min/max of the stage key — queryable provenance without touching the
-data files.
+Lineage metrics: every stage also writes ``_metrics/<stage>`` with one
+row per committed ``part-*`` file (``partition_id`` = file ordinal, row
+count, min/max of the stage key), read from the parquet footers on the
+driver — queryable provenance without touching the data files. The
+manifest's row count is the sum of the footer counts, and the manifest
+keeps the snapshot's schema, so a commit runs no Spark job after its
+write and a resumed stage reopens its snapshot without one. The cost is
+O(files) footer reads on the driver, which the commit protocol already
+assumes local (``shutil.rmtree``/``os.replace``).
 """
 
 from __future__ import annotations
@@ -29,8 +34,11 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.extract import with_extracted_text
 from ..functions.linking import link_mentions, same_as_candidates
@@ -44,6 +52,17 @@ from ..operators.merge import (
 from ..sources.corpus import alias_dictionary, generate_corpus
 
 MANIFEST_NAME = "_STAGE_MANIFEST.json"
+
+#: ``run_pipeline`` output name -> the stage that commits it
+OUTPUT_STAGES = {
+    "corpus": "corpus",
+    "extracted": "extracted",
+    "triples": "triples",
+    "linked": "linked",
+    "mapping": "components",
+    "edges": "kgx_edges",
+    "nodes": "kgx_nodes",
+}
 
 
 @dataclass
@@ -69,66 +88,131 @@ class PipelineRun:
             json.dump(self.manifest, f, indent=2)
         os.replace(tmp, mpath)
 
-    def _write_metrics(self, stage: str, df: DataFrame, key: str) -> int:
-        """One post-write scan total: the per-partition metrics
-        aggregation is the ONLY pass over the committed snapshot, and the
-        stage row count is derived as sum(rows) from the (tiny) written
-        metrics table instead of a separate ``count()`` — at 100 TB a
-        second full scan per stage is the difference between one and two
-        extra reads of the whole dataset."""
-        path = os.path.join(self.work_dir, "_metrics", stage)
-        metrics = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("rows"),
-                F.min(key).alias("key_min"),
-                F.max(key).alias("key_max"),
-            )
-            .withColumn("stage", F.lit(stage))
-        )
-        metrics.write.mode("overwrite").parquet(path)
-        total = (
-            self.spark.read.parquet(path).agg(F.sum("rows")).collect()[0][0]
-        )
-        return int(total or 0)
+    def _write_metrics(self, stage: str, out_dir: str, key: str) -> int:
+        """Write the stage's lineage rows from the footers of its
+        committed ``part-*`` files and return the stage's row count. No
+        Spark job: one footer read per file on the driver.
+
+        One row per file: ``partition_id`` (file ordinal in path order),
+        ``rows`` and ``key_min``/``key_max`` folded over the row groups'
+        statistics of ``key``. Nulls are not counted in min/max. A file
+        with non-null keys but no min/max in some row group records null
+        for both: parquet-java writes no binary statistics over 4 KiB."""
+        files = _part_files(out_dir)
+        rows, lows, highs = [], [], []
+        key_type = pa.string()  # for a snapshot with no data file
+        for f in files:
+            md = pq.read_metadata(f)
+            key_type = md.schema.to_arrow_schema().field(key).type
+            lo, hi = _key_range(md, key)
+            rows.append(md.num_rows)
+            lows.append(lo)
+            highs.append(hi)
+        cols = {
+            "partition_id": pa.array(range(len(files)), pa.int32()),
+            "rows": pa.array(rows, pa.int64()),
+            "key_min": pa.array(lows, key_type),
+            "key_max": pa.array(highs, key_type),
+            "stage": pa.array([stage] * len(files), pa.string()),
+        }
+
+        def write(tmp: str) -> None:
+            os.makedirs(tmp)
+            pq.write_table(pa.table(cols), os.path.join(tmp, "part-00000.parquet"))
+
+        _replace_dir(os.path.join(self.work_dir, "_metrics", stage), write)
+        return sum(rows)
 
     def stage(
         self,
         name: str,
         build,
         fingerprint: str,
-        metrics_key: str | None = None,
+        metrics_key: str,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Run ``build() -> DataFrame`` (or return the committed snapshot
         if this (stage, fingerprint) already committed). Commit =
-        write-to-tmp + atomic rename + manifest append."""
+        write-to-tmp + atomic rename + manifest append. The only Spark
+        jobs are the write's: the snapshot is reopened with the schema it
+        was written with, and the row count and lineage come from the
+        parquet footers."""
         out_dir = os.path.join(self.work_dir, name)
         entry = self.manifest.get(name)
-        if entry and entry.get("fingerprint") == fingerprint and os.path.exists(out_dir):
-            return self.spark.read.parquet(out_dir)
+        if (
+            entry
+            and entry.get("fingerprint") == fingerprint
+            and "schema" in entry
+            and os.path.exists(out_dir)
+        ):
+            schema = StructType.fromJson(json.loads(entry["schema"]))
+            return self.spark.read.schema(schema).parquet(out_dir)
+        if metrics_key in (partition_by or []):
+            raise ValueError(
+                f"metrics_key {metrics_key!r} is a partition column: "
+                "parquet footers hold no statistics for it"
+            )
         t0 = time.monotonic()
         df = build()
-        tmp_dir = out_dir + "._tmp"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp_dir)
-        if os.path.exists(out_dir):
-            shutil.rmtree(out_dir)
-        os.replace(tmp_dir, out_dir)
-        committed = self.spark.read.parquet(out_dir)
-        if metrics_key:
-            n = self._write_metrics(name, committed, metrics_key)
-        else:
-            n = committed.count()
+
+        def write(tmp_dir: str) -> None:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(tmp_dir)
+
+        _replace_dir(out_dir, write)
+        # an explicit schema skips inference; like inference, the reader
+        # puts partition columns last and makes every field nullable
+        committed = self.spark.read.schema(df.schema).parquet(out_dir)
+        n = self._write_metrics(name, out_dir, metrics_key)
         self.manifest[name] = {
             "fingerprint": fingerprint,
             "rows": n,
+            "schema": committed.schema.json(),
             "wall_sec": round(time.monotonic() - t0, 3),
         }
         self._save_manifest()
         return committed
+
+
+def _replace_dir(path: str, write) -> None:
+    """Commit a directory: ``write(tmp)`` into ``path._tmp``, then swap it
+    in for ``path`` with a rename."""
+    tmp = path + "._tmp"
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    write(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
+
+
+def _part_files(snapshot: str) -> list[str]:
+    """The snapshot's data files in path order, partition directories
+    included."""
+    found = []
+    for root, dirs, files in os.walk(snapshot):
+        dirs.sort()
+        found += [os.path.join(root, f) for f in sorted(files) if f.startswith("part-")]
+    return found
+
+
+def _key_range(md: pq.FileMetaData, key: str) -> tuple:
+    """(min, max) of column ``key`` over the file's row-group statistics;
+    (None, None) if the file holds no non-null key or some row group
+    with non-null keys has no min/max."""
+    j = next(i for i in range(md.num_columns) if md.schema.column(i).path == key)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        col = md.row_group(g).column(j)
+        st = col.statistics
+        if st is not None and st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif st is None or not st.has_null_count or st.null_count < col.num_values:
+            return None, None
+    return lo, hi
 
 
 def run_pipeline(

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from kg_microbe_merge_spark.plans.pipeline import MANIFEST_NAME, run_pipeline
 
 N_DOCS = 200
@@ -72,33 +74,193 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert out3["corpus"].count() == N_DOCS // 2
 
 
-def test_stage_commit_single_post_write_scan(spark, tmp_path, monkeypatch):
-    """A stage commit with a metrics key must make exactly ONE pass over
-    the committed snapshot: the row count comes from sum(rows) of the
-    written per-partition metrics, never a separate count() (which at
-    100 TB would be a second full scan per stage)."""
-    import pyspark.sql as psql
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result and
+    the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
+
+def test_stage_commit_single_post_write_scan(spark, tmp_path):
+    """A fresh stage commit runs the write's Spark jobs and nothing else:
+    the snapshot is reopened with its known schema and the row count and
+    lineage come from the parquet footers. A resumed stage runs no job."""
     from kg_microbe_merge_spark.plans.pipeline import PipelineRun
 
-    run = PipelineRun(spark, str(tmp_path / "wd"))
-    counts = {"n": 0}
-    orig = psql.DataFrame.count
+    def build():
+        return spark.range(100).withColumnRenamed("id", "k")
 
-    def counting(self):
-        counts["n"] += 1
-        return orig(self)
-
-    monkeypatch.setattr(psql.DataFrame, "count", counting)
-    df = run.stage(
-        "s1",
-        lambda: spark.range(100).withColumnRenamed("id", "k"),
-        "fp1",
-        metrics_key="k",
+    _, write_jobs = _jobs_in_group(
+        spark, "test-bare-write", lambda: build().write.parquet(str(tmp_path / "bare"))
     )
-    assert counts["n"] == 0, "stage() called DataFrame.count despite metrics"
+    assert write_jobs >= 1
+    run = PipelineRun(spark, str(tmp_path / "wd"))
+    df, jobs = _jobs_in_group(
+        spark, "test-fresh-stage", lambda: run.stage("s1", build, "fp1", metrics_key="k")
+    )
+    assert jobs == write_jobs, f"stage() ran {jobs - write_jobs} jobs after its write"
     assert run.manifest["s1"]["rows"] == 100
     metrics = spark.read.parquet(str(tmp_path / "wd" / "_metrics" / "s1"))
     rows = metrics.agg({"rows": "sum"}).collect()[0][0]
     assert rows == 100
     assert df.columns == ["k"]
+
+    resumed = PipelineRun(spark, str(tmp_path / "wd"))
+    again, jobs = _jobs_in_group(
+        spark, "test-resumed-stage",
+        lambda: resumed.stage("s1", build, "fp1", metrics_key="k"),
+    )
+    assert jobs == 0, f"a resumed stage() ran {jobs} jobs"
+    assert again.columns == df.columns and again.schema == df.schema
+
+
+def _check_footer_lineage(spark, run, stage, key, check_range=True):
+    """Each ``_metrics/<stage>`` row equals a Spark count (and, with
+    ``check_range``, min/max of ``key``) over the committed file it names,
+    and the manifest rows equal a Spark count of the snapshot. Returns the
+    metrics rows in file order."""
+    from urllib.parse import unquote
+
+    import pyspark.sql.functions as F
+
+    from kg_microbe_merge_spark.plans.pipeline import _part_files
+
+    snapshot = os.path.join(run.work_dir, stage)
+    files = _part_files(snapshot)
+    metrics = spark.read.parquet(os.path.join(run.work_dir, "_metrics", stage))
+    got = {r["partition_id"]: r for r in metrics.collect()}
+    assert sorted(got) == list(range(len(files)))
+    per_file = {  # input_file_name() is a URI: unquote it back to the file path
+        unquote(r["f"]): r
+        for r in spark.read.parquet(snapshot)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"), F.min(key).alias("lo"), F.max(key).alias("hi"))
+        .collect()
+    }
+    for i, f in enumerate(files):
+        want = next((r for u, r in per_file.items() if u.endswith(f)), None)
+        n, lo, hi = (want["n"], want["lo"], want["hi"]) if want else (0, None, None)
+        assert got[i]["rows"] == n and got[i]["stage"] == stage
+        if check_range:
+            assert (got[i]["key_min"], got[i]["key_max"]) == (lo, hi), (stage, f)
+    total = spark.read.parquet(snapshot).count()
+    assert run.manifest[stage]["rows"] == total == sum(r["rows"] for r in got.values())
+    return [got[i] for i in range(len(files))]
+
+
+def test_stage_lineage_from_footers(spark, tmp_path):
+    """Footer-built lineage equals Spark's own count/min/max per committed
+    file, over several files, a partitioned snapshot, an empty snapshot
+    and a key with nulls; a key over 4 KiB records null min/max for its
+    file (parquet-java writes no binary statistics that large)."""
+    import pyspark.sql.functions as F
+
+    from kg_microbe_merge_spark.plans.pipeline import PipelineRun
+
+    run = PipelineRun(spark, str(tmp_path / "wd"))
+    ids = spark.range(0, 1000, numPartitions=4)
+    cases = {
+        "several": (ids.select(F.format_string("k%04d", "id").alias("k")), None),
+        "partitioned": (
+            ids.select(F.format_string("k%04d", "id").alias("k"),
+                       (F.col("id") % 3).alias("p")),
+            ["p"],
+        ),
+        "empty": (ids.filter("id < 0").select(F.col("id").alias("k")), None),
+        "nulls": (
+            ids.select(
+                F.when((F.col("id") % 5 == 0) | (F.col("id") >= 750), None)
+                .otherwise(F.col("id")).alias("k")
+            ),
+            None,
+        ),
+    }
+    for stage, (df, partition_by) in cases.items():
+        fresh = run.stage(stage, lambda df=df: df, "fp", metrics_key="k",
+                          partition_by=partition_by)
+        _check_footer_lineage(spark, run, stage, "k")
+        resumed = run.stage(stage, None, "fp", "k").schema
+        assert resumed == fresh.schema
+        if stage != "empty":  # no data file to infer a schema from
+            inferred = spark.read.parquet(os.path.join(run.work_dir, stage)).schema
+            assert resumed.names == inferred.names
+            if not partition_by:
+                assert resumed == inferred
+    # a partition column keeps its written type; inference would guess
+    # int from the directory names
+    assert run.stage("partitioned", None, "fp", "k").schema["p"].dataType.typeName() == "long"
+    # the 'nulls' snapshot's last file holds only null keys
+    nulls = _check_footer_lineage(spark, run, "nulls", "k")
+    assert nulls[-1]["rows"] == 250 and nulls[-1]["key_min"] is None
+    assert len(_check_footer_lineage(spark, run, "several", "k")) == 4
+    assert len(_check_footer_lineage(spark, run, "partitioned", "k")) == 12
+    assert run.manifest["empty"]["rows"] == 0
+    # footers hold no statistics for a partition column
+    with pytest.raises(ValueError, match="partition column"):
+        run.stage("by_key", lambda: cases["partitioned"][0], "fp",
+                  metrics_key="p", partition_by=["p"])
+
+    big = "z" * 5000
+    # two files: [big] and ["a", "b"]
+    keys = F.array(F.lit(big), F.lit("a"), F.lit("b"))
+    two_files = spark.range(0, 3, 1, 2).select(
+        F.element_at(keys, F.col("id").cast("int") + 1).alias("k")
+    )
+    run.stage("big_key", lambda: two_files, "fp", metrics_key="k")
+    got = _check_footer_lineage(spark, run, "big_key", "k", check_range=False)
+    assert [(r["rows"], r["key_min"], r["key_max"]) for r in got] == [
+        (1, None, None), (2, "a", "b")
+    ]
+
+
+def test_manifest_entry_without_schema_is_recomputed(spark, tmp_path):
+    """A committed entry that carries no schema (written before schemas
+    were kept) is rebuilt, never reopened by guess."""
+    from kg_microbe_merge_spark.plans.pipeline import PipelineRun
+
+    wd = str(tmp_path / "wd")
+    run = PipelineRun(spark, wd)
+    run.stage("s", lambda: spark.range(5).withColumnRenamed("id", "k"), "fp",
+              metrics_key="k")
+    del run.manifest["s"]["schema"]
+    run._save_manifest()
+
+    builds = []
+
+    def rebuild():
+        builds.append(1)
+        return spark.range(7).selectExpr("cast(id as string) as k", "id as v")
+
+    again = PipelineRun(spark, wd)
+    df = again.stage("s", rebuild, "fp", metrics_key="k")
+    assert builds == [1]
+    assert df.columns == ["k", "v"] and df.count() == 7
+    with open(os.path.join(wd, MANIFEST_NAME)) as f:
+        entry = json.load(f)["s"]
+    assert entry["rows"] == 7 and "schema" in entry
+
+
+def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
+    """For every stage of a run: manifest rows equal a Spark count of the
+    snapshot, the reopened schema equals the inferred one, and the
+    footer lineage equals Spark's per-file aggregates."""
+    from kg_microbe_merge_spark.plans.pipeline import OUTPUT_STAGES, PipelineRun
+
+    wd = str(tmp_path / "run")
+    out = run_pipeline(spark, wd, n_docs=60, seed=7)
+    run = PipelineRun(spark, wd)
+    keys = {"corpus": "url", "extracted": "url", "triples": "subj", "linked": "subj",
+            "components": "node", "canonical_triples": "subj",
+            "kgx_edges": "subject", "kgx_nodes": "id"}
+    assert set(run.manifest) == set(keys)
+    for stage, key in keys.items():
+        _check_footer_lineage(spark, run, stage, key)
+    for name, stage in OUTPUT_STAGES.items():
+        inferred = spark.read.parquet(os.path.join(wd, stage)).schema
+        assert out[name].schema == inferred, stage
