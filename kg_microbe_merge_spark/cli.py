@@ -419,7 +419,11 @@ def main(argv: list[str] | None = None) -> None:
     m.add_argument("--tar", action="store_true")
     m.set_defaults(fn=_cmd_merge)
 
-    pl = sub.add_parser("pipeline", help="run the web-KG construction pipeline")
+    pl = sub.add_parser(
+        "pipeline",
+        help="run the web-KG construction pipeline; prints the committed row "
+        "counts of corpus, triples, linked, mapping, edges and nodes",
+    )
     pl.add_argument("--work-dir", required=True)
     pl.add_argument("--n-docs", type=int, default=2000)
     pl.add_argument("--seed", type=int, default=42)

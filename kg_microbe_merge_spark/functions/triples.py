@@ -1,22 +1,19 @@
 """OpenIE-style (subject, predicate, object) triple extraction.
 
-One pure function, two distributed plans over it:
+One pure function and one distributed plan over it:
 
 1. :func:`extract_triples_py` — pure single-threaded Python: THE
    reference implementation for the P/R ≥ 0.95 target (our deterministic
    stand-in for the reference pipeline's emitted triples, cf.
    BASELINE.json north_star).
-2. :func:`extract_triples_udf` — Arrow-batched pandas UDF returning
-   ``array<struct<subj,pred,obj,conf>>`` which :func:`with_triples`
-   explodes — the UDTF-shaped distributed path (no per-row Python; one
-   Python invocation per Arrow batch).
-3. :func:`triples_from_corpus` — the fused html → triples path: text
-   extraction and SVO extraction in one ``mapInPandas`` Arrow hop.
+2. :func:`triples_from_corpus` — the html → triples plan that
+   ``run_pipeline`` and the streaming ingest run: text extraction and
+   SVO extraction in one ``mapInPandas`` Arrow hop.
 
 A separate, fully JVM-side variant :func:`extract_triples_regexp` uses
 ``F.regexp_extract_all`` for the simple word-pattern grammar — zero
-Python in the hot path; used for the driver-testdata ``documents`` table
-where tokens are single lowercase words.
+Python in the hot path; used only by the driver contract, over the
+testdata ``documents`` table where tokens are single lowercase words.
 
 Grammar: sentences are split on '.', predicates come from a closed verb
 lexicon (multi-word verbs allowed), subject/object are capitalized
@@ -28,6 +25,7 @@ stopwords.yaml lexicon — list re-derived, not copied).
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -58,8 +56,9 @@ _ENTITY_RE = r"[A-Z][A-Za-z0-9_]*"
 _VERB_ALT = "|".join(sorted((re.escape(v) for v in VERB_LEXICON), key=len, reverse=True))
 _TRIPLE_RE = re.compile(rf"({_ENTITY_RE})\s+({_VERB_ALT})\s+({_ENTITY_RE})")
 
-TRIPLE_STRUCT = T.StructType(
+TRIPLES_SCHEMA = T.StructType(
     [
+        T.StructField("url", T.StringType()),
         T.StructField("subj", T.StringType()),
         T.StructField("pred", T.StringType()),
         T.StructField("obj", T.StringType()),
@@ -87,89 +86,31 @@ def extract_triples_py(text: str | None) -> list[tuple[str, str, str, float]]:
     return out
 
 
-@F.pandas_udf(T.ArrayType(TRIPLE_STRUCT))
-def extract_triples_udf(text: pd.Series) -> pd.Series:
-    """Arrow-batched wrapper over :func:`extract_triples_py`."""
-    return text.map(
-        lambda t: [
-            {"subj": s, "pred": p, "obj": o, "conf": c}
-            for (s, p, o, c) in extract_triples_py(t)
-        ]
-    )
-
-
-def with_triples(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Engine stage: text → exploded triple rows. Rows with no triples
-    are dropped (inner explode) — the downstream graph only sees
-    documents that assert something."""
-    return (
-        df.withColumn("_triples", extract_triples_udf(F.col(text_col)))
-        .withColumn("triple", F.explode("_triples"))
-        .drop("_triples")
-        .select(
-            *df.columns,
-            F.col("triple.subj").alias("subj"),
-            F.col("triple.pred").alias("pred"),
-            F.col("triple.obj").alias("obj"),
-            F.col("triple.conf").alias("conf"),
-        )
-    )
-
-
-def triples_from_corpus(
-    corpus: DataFrame,
-    lang: str | None = "en",
-    url_col: str = "url",
-    html_col: str = "html",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Fused corpus → exploded triples: html text extraction + SVO
+def triples_from_corpus(corpus: DataFrame) -> DataFrame:
+    """Corpus → exploded triples: html text extraction and SVO
     extraction in ONE Arrow round trip.
 
-    Semantically identical to ``with_extracted_text`` →
-    ``filter(lang)`` → ``with_triples`` (same pure functions
-    :func:`~..extract.extract_text_py` / :func:`extract_triples_py`
-    per row — pytest asserts exact equality), but the plan shape is
-    what scales: the two chained pandas UDFs of the unfused path are
-    two ArrowEvalPython hops, each serializing the full document text
-    JVM→Python→JVM; this single ``mapInPandas`` stage crosses Arrow
-    once with (url, html) in and only the triple rows out (orders of
-    magnitude smaller than the text), and the language filter runs
-    JVM-side BEFORE the hop — pushed into the parquet scan, so
-    non-target-language html is never decoded, transferred, or
-    extracted. Measured on the 4 M-doc scaling corpus this removes an
-    entire encode/decode of the text column per document and the
-    per-hop worker synchronization stalls that showed up as idle HW
-    threads at local[32].
+    ``corpus`` has the ``input_hint`` columns (``CORPUS_SCHEMA``). Only
+    ``lang = 'en'`` rows are read, and the filter runs JVM-side BEFORE
+    the hop — pushed into a parquet scan, so other html is never
+    decoded, transferred or extracted. A row with non-null ``text``
+    keeps it; otherwise its text is :func:`~.extract.extract_text_py`
+    of its html. Per row the output is :func:`extract_triples_py` of
+    that text (pytest asserts equality with the pure-Python reference).
 
-    Rows that already carry non-null ``text`` keep it (same input
-    contract as ``with_extracted_text``); the iterator form amortizes
-    regex/parser setup across all batches of a partition.
+    The plan shape is what scales: one ``mapInPandas`` crosses Arrow
+    once with (url, html, text) in and only the triple rows out, where
+    chaining a text UDF into a triples UDF would round-trip the full
+    text column JVM→Python→JVM twice (measured on a 4 M-doc corpus,
+    local[8]: 70.6 → 41.1 s). The iterator form amortizes regex/parser
+    setup across all batches of a partition.
 
     Output: (url, subj, pred, obj, conf) — documents with no triples
     produce no rows (inner-explode semantics).
     """
-    from collections.abc import Iterator
-
     from .extract import extract_text_py
 
-    has_text = text_col in corpus.columns
-    cols = [url_col, html_col] + ([text_col] if has_text else [])
-    src = corpus
-    if lang is not None and lang_col in corpus.columns:
-        src = src.filter(F.col(lang_col) == lang)
-    src = src.select(*cols)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(url_col, T.StringType()),
-            T.StructField("subj", T.StringType()),
-            T.StructField("pred", T.StringType()),
-            T.StructField("obj", T.StringType()),
-            T.StructField("conf", T.DoubleType()),
-        ]
-    )
+    src = corpus.filter(F.col("lang") == "en").select("url", "html", "text")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -178,12 +119,9 @@ def triples_from_corpus(
             preds: list[str] = []
             objs: list[str] = []
             confs: list[float] = []
-            htmls = pdf[html_col]
-            texts = pdf[text_col] if has_text else None
-            for i, u in enumerate(pdf[url_col]):
-                t = texts.iloc[i] if texts is not None else None
+            for u, h, t in zip(pdf["url"], pdf["html"], pdf["text"]):
                 if t is None:
-                    t = extract_text_py(htmls.iloc[i])
+                    t = extract_text_py(h)
                 for s, p, o, c in extract_triples_py(t):
                     urls.append(u)
                     subjs.append(s)
@@ -191,16 +129,10 @@ def triples_from_corpus(
                     objs.append(o)
                     confs.append(c)
             yield pd.DataFrame(
-                {
-                    url_col: urls,
-                    "subj": subjs,
-                    "pred": preds,
-                    "obj": objs,
-                    "conf": confs,
-                }
+                {"url": urls, "subj": subjs, "pred": preds, "obj": objs, "conf": confs}
             )
 
-    return src.mapInPandas(gen, out_schema)
+    return src.mapInPandas(gen, TRIPLES_SCHEMA)
 
 
 def extract_triples_regexp(

@@ -1,9 +1,10 @@
 """End-to-end web-KG construction pipeline with checkpoint/resume and
 per-partition lineage metrics.
 
-Stages (BASELINE.json north_star):
-  corpus → extract(text) → triples → link(mentions) → same_as CC →
-  canonicalize → KGX nodes/edges merge → materialize.
+Stages (BASELINE.json north_star), each committed:
+  corpus → triples (fused text extraction + SVO, one Arrow hop) →
+  linked → components (same_as CC) → canonical_triples →
+  kgx_edges / kgx_nodes.
 
 Checkpoint/resume: each stage commits its output as a parquet snapshot
 directory plus a ``_STAGE_MANIFEST.json`` entry (stage name, input
@@ -40,9 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.extract import with_extracted_text
 from ..functions.linking import link_mentions, same_as_candidates
-from ..functions.triples import with_triples
+from ..functions.triples import triples_from_corpus
 from ..operators.components import connected_components
 from ..operators.merge import (
     edges_merge_provenance,
@@ -56,7 +56,6 @@ MANIFEST_NAME = "_STAGE_MANIFEST.json"
 #: ``run_pipeline`` output name -> the stage that commits it
 OUTPUT_STAGES = {
     "corpus": "corpus",
-    "extracted": "extracted",
     "triples": "triples",
     "linked": "linked",
     "mapping": "components",
@@ -228,18 +227,8 @@ def run_pipeline(
     corpus = run.stage(
         "corpus", lambda: generate_corpus(spark, n_docs, seed), fp, metrics_key="url"
     )
-    extracted = run.stage(
-        "extracted",
-        lambda: with_extracted_text(corpus).select("url", "warc_ts", "text", "lang"),
-        fp,
-        metrics_key="url",
-    )
-    en = extracted.filter(F.col("lang") == "en")
     triples = run.stage(
-        "triples",
-        lambda: with_triples(en.select("url", "text")).drop("text"),
-        fp,
-        metrics_key="subj",
+        "triples", lambda: triples_from_corpus(corpus), fp, metrics_key="subj"
     )
     aliases = alias_dictionary(spark)
     linked = run.stage(
@@ -314,7 +303,6 @@ def run_pipeline(
 
     return {
         "corpus": corpus,
-        "extracted": extracted,
         "triples": triples,
         "linked": linked,
         "mapping": mapping,

@@ -8,10 +8,10 @@ table (file source standing in for Iceberg incremental reads), with
 exactly-once sink semantics via the streaming checkpoint, plus a
 watermarked tumbling-window crawl-rate aggregation for monitoring.
 
-The transformations are the IDENTICAL functions used in batch
-(functions/extract.py, functions/triples.py) — one definition, two
-execution modes; pandas UDFs are stateless and deterministic so they are
-safe under streaming re-execution.
+The html → triples transformation is the IDENTICAL plan ``run_pipeline``
+runs in batch (``functions/triples.triples_from_corpus``) — one
+definition, two execution modes; its ``mapInPandas`` is stateless and
+deterministic, so it is safe under streaming re-execution.
 
 Batch-incremental testing uses ``Trigger.AvailableNow`` so a test (or a
 cron-style incremental job, the Iceberg pattern) drains everything
@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.extract import with_extracted_text
-from ..functions.triples import with_triples
+from ..functions.triples import triples_from_corpus
 from ..sources.corpus import CORPUS_SCHEMA
 
 
@@ -38,16 +37,6 @@ def read_corpus_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(corpus_dir)
-
-
-def streaming_triples(corpus_stream: DataFrame) -> DataFrame:
-    """corpus stream → (url, warc_ts, subj, pred, obj, conf) stream —
-    stateless per-row transforms only, so no state store is involved."""
-    extracted = with_extracted_text(corpus_stream).select(
-        "url", "warc_ts", "text", "lang"
-    )
-    en = extracted.filter(F.col("lang") == "en")
-    return with_triples(en.select("url", "warc_ts", "text")).drop("text")
 
 
 def crawl_rate(
@@ -83,10 +72,12 @@ def run_triples_stream(
     available_now: bool = True,
 ):
     """Launch the corpus→triples streaming query writing parquet with
-    exactly-once file-sink semantics. ``available_now=True`` drains the
-    current source contents and stops (incremental-batch mode); False
-    runs continuously."""
-    stream = streaming_triples(read_corpus_stream(spark, corpus_dir))
+    exactly-once file-sink semantics: (url, subj, pred, obj, conf) rows
+    of the en documents, by the batch plan ``triples_from_corpus`` —
+    stateless per-row transforms only, so no state store is involved.
+    ``available_now=True`` drains the current source contents and stops
+    (incremental-batch mode); False runs continuously."""
+    stream = triples_from_corpus(read_corpus_stream(spark, corpus_dir))
     writer = (
         stream.writeStream.format("parquet")
         .option("path", output_dir)

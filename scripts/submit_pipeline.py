@@ -33,10 +33,16 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from kg_microbe_merge_spark.plans.pipeline import run_pipeline
+    from kg_microbe_merge_spark.plans.pipeline import (
+        OUTPUT_STAGES,
+        PipelineRun,
+        run_pipeline,
+    )
 
-    out = run_pipeline(spark, work_dir, n_docs=n_docs, seed=42)
-    counts = {k: v.count() for k, v in out.items()}
+    run_pipeline(spark, work_dir, n_docs=n_docs, seed=42)
+    # row counts as committed: the manifest, not a re-scan of each output
+    manifest = PipelineRun(spark, work_dir).manifest
+    counts = {k: manifest[stage]["rows"] for k, stage in OUTPUT_STAGES.items()}
     print(f"PIPELINE-OK {counts}")
     spark.stop()
 

@@ -10,9 +10,9 @@
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from kg_microbe_merge_spark.functions.extract import (
     extract_text_py,
@@ -21,7 +21,6 @@ from kg_microbe_merge_spark.functions.extract import (
 from kg_microbe_merge_spark.functions.triples import (
     extract_triples_py,
     triples_from_corpus,
-    with_triples,
 )
 from kg_microbe_merge_spark.sources.corpus import (
     gen_doc,
@@ -72,10 +71,7 @@ def test_extract_prefers_existing_text(spark):
 
 def test_triple_precision_recall(spark):
     corpus = generate_corpus(spark, N_DOCS, seed=42)
-    extracted = with_extracted_text(corpus).filter(F.col("lang") == "en")
-    got = with_triples(extracted.select("url", "text")).select(
-        "url", "subj", "pred", "obj"
-    )
+    got = triples_from_corpus(corpus).select("url", "subj", "pred", "obj")
     truth = ground_truth_triples(spark, N_DOCS, seed=42)
     got_set = {tuple(r) for r in got.collect()}
     truth_set = {tuple(r) for r in truth.collect()}
@@ -100,34 +96,24 @@ def test_triples_deterministic_and_pure(spark):
 
 
 def test_fused_triples_equal_unfused_path(spark):
-    """triples_from_corpus (one mapInPandas hop) must equal the
-    two-UDF path exactly — same rows, same multiplicities."""
-    from kg_microbe_merge_spark.functions.triples import (
-        triples_from_corpus,
-        with_triples,
+    """triples_from_corpus (one mapInPandas hop) must equal the pure
+    Python reference extract_triples_py(extract_text_py(html)) over the
+    en docs exactly — same rows, same multiplicities, conf included."""
+    corpus = generate_corpus(spark, N_DOCS, seed=42)
+    want = Counter(
+        (d["url"], s, p, o, c)
+        for d in (gen_doc(42, i) for i in range(N_DOCS))
+        if d["lang"] == "en"
+        for s, p, o, c in extract_triples_py(extract_text_py(d["html"]))
     )
-
-    corpus = generate_corpus(spark, 400, seed=42)
-    unfused = (
-        with_triples(
-            with_extracted_text(corpus)
-            .filter(F.col("lang") == "en")
-            .select("url", "text")
-        )
-        .select("url", "subj", "pred", "obj", "conf")
-    )
-    fused = triples_from_corpus(corpus)
-    a = sorted(map(tuple, unfused.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b and a
+    got = Counter(map(tuple, triples_from_corpus(corpus).collect()))
+    assert got == want and want
 
 
 def test_fused_triples_plan_shape(spark, tmp_path):
     """ONE Python hop over a parquet corpus; the language filter is
     pushed into the scan, so non-en html is never decoded or
     transferred across Arrow."""
-    from kg_microbe_merge_spark.functions.triples import triples_from_corpus
-
     path = str(tmp_path / "corpus")
     generate_corpus(spark, 50, seed=1).write.parquet(path)
     plan = (
@@ -144,8 +130,6 @@ def test_fused_triples_plan_shape(spark, tmp_path):
 def test_fused_triples_keeps_preextracted_text(spark):
     """Rows with non-null text skip html extraction (input contract
     parity with with_extracted_text)."""
-    from kg_microbe_merge_spark.functions.triples import triples_from_corpus
-
     df = spark.createDataFrame(
         [
             ("u1", None, "Alpha produces Beta", "en"),

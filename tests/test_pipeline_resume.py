@@ -43,7 +43,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
 
     # manifest written, one entry per stage
     manifest = json.load(open(os.path.join(wd, MANIFEST_NAME)))
-    for stage in ("corpus", "extracted", "triples", "linked",
+    for stage in ("corpus", "triples", "linked",
                   "components", "canonical_triples", "kgx_edges", "kgx_nodes"):
         assert stage in manifest and manifest[stage]["rows"] >= 0
 
@@ -249,13 +249,18 @@ def test_manifest_entry_without_schema_is_recomputed(spark, tmp_path):
 def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
     """For every stage of a run: manifest rows equal a Spark count of the
     snapshot, the reopened schema equals the inferred one, and the
-    footer lineage equals Spark's per-file aggregates."""
+    footer lineage equals Spark's per-file aggregates. The committed
+    triples equal the pure-Python reference over the corpus's en docs."""
+    from collections import Counter
+
+    from kg_microbe_merge_spark.functions.extract import extract_text_py
+    from kg_microbe_merge_spark.functions.triples import extract_triples_py
     from kg_microbe_merge_spark.plans.pipeline import OUTPUT_STAGES, PipelineRun
 
     wd = str(tmp_path / "run")
     out = run_pipeline(spark, wd, n_docs=60, seed=7)
     run = PipelineRun(spark, wd)
-    keys = {"corpus": "url", "extracted": "url", "triples": "subj", "linked": "subj",
+    keys = {"corpus": "url", "triples": "subj", "linked": "subj",
             "components": "node", "canonical_triples": "subj",
             "kgx_edges": "subject", "kgx_nodes": "id"}
     assert set(run.manifest) == set(keys)
@@ -264,3 +269,12 @@ def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
     for name, stage in OUTPUT_STAGES.items():
         inferred = spark.read.parquet(os.path.join(wd, stage)).schema
         assert out[name].schema == inferred, stage
+    want = Counter(
+        (d["url"], s, p, o, c)
+        for d in out["corpus"].collect()
+        if d["lang"] == "en"
+        for s, p, o, c in extract_triples_py(
+            d["text"] if d["text"] is not None else extract_text_py(d["html"])
+        )
+    )
+    assert Counter(map(tuple, out["triples"].collect())) == want and want

@@ -9,8 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from kg_microbe_merge_spark.functions.extract import with_extracted_text
-from kg_microbe_merge_spark.functions.triples import with_triples
+from kg_microbe_merge_spark.functions.triples import triples_from_corpus
 from kg_microbe_merge_spark.sources.corpus import generate_corpus
 from kg_microbe_merge_spark.streaming.ingest import (
     crawl_rate,
@@ -22,9 +21,7 @@ N = 120
 
 
 def _batch_triples(spark, corpus_df):
-    extracted = with_extracted_text(corpus_df).select("url", "warc_ts", "text", "lang")
-    en = extracted.filter(F.col("lang") == "en")
-    return with_triples(en.select("url", "warc_ts", "text")).drop("text")
+    return triples_from_corpus(corpus_df)
 
 
 def test_stream_matches_batch_and_resumes(spark, tmp_path):
