@@ -8,6 +8,10 @@ no shuffle of the 100 TB side. Ambiguity (one alias → k entity_ids) is
 resolved by max prior with a deterministic entity_id tiebreak, expressed
 as a single ``max_by``-style aggregation (no window over the huge side
 needed — we reduce the *dictionary*, not the corpus).
+
+Cross-source equivalence (two entity ids sharing an alias are
+``same_as``) is not a self-join here: the pipeline hands the dictionary's
+alias groups straight to ``operators.components.alias_group_components``.
 """
 
 from __future__ import annotations
@@ -62,20 +66,3 @@ def link_mentions(
         ).drop(f"_{col}_eid")
     return out
 
-
-def same_as_candidates(aliases: DataFrame, min_prior: float = 0.0) -> DataFrame:
-    """Cross-source equivalence candidates: two entity ids sharing an
-    alias are ``same_as`` candidates. Dictionary-sized self-join, so one
-    side is broadcast (no shuffle before the join); output feeds
-    connected-components canonicalization."""
-    a = aliases.filter(F.col("prior") >= min_prior).select("alias", "entity_id")
-    b = a.withColumnRenamed("entity_id", "entity_id_b")
-    return (
-        a.join(F.broadcast(b), "alias")
-        .filter(F.col("entity_id") < F.col("entity_id_b"))
-        .select(
-            F.col("entity_id").alias("src"),
-            F.col("entity_id_b").alias("dst"),
-        )
-        .distinct()
-    )

@@ -9,12 +9,26 @@ ID reconciliation becomes label propagation that converges in
 O(log^2 n) rounds regardless of component diameter, so a 10^12-node
 graph with a continent-sized component still terminates.
 
+Two entry points share one solve path (``_solve``):
+:func:`connected_components` over ``(src, dst)`` edges, and
+:func:`alias_group_components` over ``(alias, entity_id)`` rows, where
+the entities sharing an alias are ``same_as``. The groups are never expanded
+into pairs: on the driver each member is unioned with the first member
+of its group, and above the cap each member → its group's min member is
+one edge of the star rounds. An alias shared by k entities thus costs
+k−1 edges instead of k(k−1)/2; one generic alias over 1,415 entities
+was enough to push the pairwise graph past the driver cap (MinoanER,
+EDBT'19, resolves entities from blocks the same way).
+
 Scale notes
 -----------
 * One bounded probe, ``limit(_DRIVER_THRESHOLD + 1).collect()``, picks
-  the solve: up to 1M edges, one driver-side union-find over the
-  collected rows (no second pass, no per-round jobs; 6.5x faster than
-  the rounds at 1M edges on 4 vCPUs). The cap bounds driver memory:
+  the solve: up to 1M edges (or dictionary rows), one driver-side
+  union-find over the collected rows (no second pass, no per-round jobs;
+  6.5x faster than the rounds at 1M edges on 4 vCPUs). Its result is
+  built from an Arrow table (``workerenv.local_relation``), so under
+  48 MB it is a ``LocalRelation`` that the stage write scans in the JVM,
+  with no Python worker. The cap bounds driver memory:
   ~0.6 KB of Python heap per edge, and the probe's rows count against
   ``spark.driver.maxResultSize`` (1 GB default, enough for ids up to
   ~500 bytes). Measurements: PLANS.md, "Connected components at scale".
@@ -38,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..workerenv import local_relation
 
 
 def _canonical_edges(e: DataFrame) -> DataFrame:
@@ -129,12 +145,65 @@ def connected_components(
     and the result is materialized either way.
     """
     probe = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    return _solve(probe, lambda rows: rows, lambda e: e, max_iterations)
+
+
+def alias_group_components(aliases: DataFrame, max_iterations: int = 50) -> DataFrame:
+    """:func:`connected_components` of the ``same_as`` graph in which the
+    ``entity_id``s sharing an ``alias`` are linked, solved from the groups
+    without expanding them into pairs. Only members of groups with at
+    least two distinct non-null members get a row; null aliases and
+    members link nothing.
+
+    At most ``_DRIVER_THRESHOLD`` dictionary rows are solved on the
+    driver (each member is unioned with its group's first member);
+    above that, each member → its group's min member is one edge of the
+    star rounds, so a group of k members costs k−1 edges, not k(k−1)/2.
+    """
+    probe = aliases.select("alias", F.col("entity_id").alias("node")).filter(
+        F.col("alias").isNotNull() & F.col("node").isNotNull()
+    )
+    return _solve(probe, _group_edges, _group_star_edges, max_iterations)
+
+
+def _group_edges(rows):
+    """Driver edges of collected ``(alias, node)`` rows: each member to
+    the first member of its alias group."""
+    first: dict = {}
+    for a, x in rows:
+        head = first.setdefault(a, x)
+        if x != head:
+            yield head, x
+
+
+def _group_star_edges(groups: DataFrame) -> DataFrame:
+    """``(src, dst)`` edges of ``(alias, node)`` groups: each member to
+    its group's min member (a one-member group yields none)."""
+    heads = groups.groupBy("alias").agg(F.min("node").alias("dst"))
+    return (
+        groups.join(heads, "alias")
+        .select(F.col("node").alias("src"), "dst")
+        .filter(F.col("src") != F.col("dst"))
+    )
+
+
+def _solve(
+    probe: DataFrame, driver_edges, star_edges, max_iterations: int
+) -> DataFrame:
+    """The one solve path: one bounded collect of ``probe``; up to
+    ``_DRIVER_THRESHOLD`` rows run ``_union_find(driver_edges(rows))``
+    on the driver and come back as a ``LocalRelation``, more run the
+    star rounds over ``star_edges(probe)``. Both are typed like the
+    ``(src, dst)`` edges the star rounds would take."""
     rows = probe.limit(_DRIVER_THRESHOLD + 1).collect()
+    edges = star_edges(probe)
     if len(rows) > _DRIVER_THRESHOLD:
-        return _star_components(probe, max_iterations).localCheckpoint(eager=True)
-    t, nullable = probe.schema["src"].dataType, any(f.nullable for f in probe.schema)
+        return _star_components(edges, max_iterations).localCheckpoint(eager=True)
+    t, nullable = edges.schema["src"].dataType, any(f.nullable for f in edges.schema)
     fields = [T.StructField(c, t, nullable) for c in ("node", "component")]
-    return edges.sparkSession.createDataFrame(_union_find(rows), T.StructType(fields))
+    return local_relation(
+        probe.sparkSession, _union_find(driver_edges(rows)), T.StructType(fields)
+    )
 
 
 def _star_components(raw: DataFrame, max_iterations: int) -> DataFrame:

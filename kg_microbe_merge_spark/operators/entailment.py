@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..workerenv import local_relation
+
 #: RDFS-lite vocabulary (CURIE forms; callers override per KG dialect).
 TYPE_PRED = "rdf:type"
 SUBCLASS_PRED = "rdfs:subClassOf"
@@ -134,11 +136,6 @@ def _tbox_rows(tb: DataFrame) -> list[tuple[str, str, str]]:
     ]
 
 
-def _lit_df(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """Literal local relation (broadcast-join side or stream)."""
-    return spark.createDataFrame(rows, schema)
-
-
 def _rdfs_streams(
     abox: DataFrame,
     tbox: DataFrame,
@@ -157,7 +154,7 @@ def _rdfs_streams(
     spark = tbox.sparkSession
     if tb_rows is None:
         tb_rows = _tbox_rows(tbox)
-    tb = _lit_df(
+    tb = local_relation(
         spark, tb_rows, "subject string, predicate string, object string"
     )
 
@@ -177,18 +174,18 @@ def _rdfs_streams(
     def _pairs(pred: str) -> list[tuple[str, str]]:
         return [(s, o) for s, p, o in tb_rows if p == pred]
 
-    subprop_c = _lit_df(
+    subprop_c = local_relation(
         spark, _closure_pairs_py(_pairs(SUBPROP_PRED)),
         "src string, dst string",
     )
-    subclass_c = _lit_df(
+    subclass_c = local_relation(
         spark, _closure_pairs_py(_pairs(SUBCLASS_PRED)),
         "src string, dst string",
     )
-    domains = _lit_df(
+    domains = local_relation(
         spark, _pairs(DOMAIN_PRED), "src string, cls string"
     )
-    ranges = _lit_df(
+    ranges = local_relation(
         spark, _pairs(RANGE_PRED), "src string, cls string"
     )
 
@@ -432,12 +429,12 @@ def owl_saturate(
         (s, o) for s, p, o in tb_rows if p == INVERSE_PRED
     }
     # inverseOf is symmetric in p/q: apply both directions
-    inv_both = _lit_df(
+    inv_both = local_relation(
         spark,
         sorted(inv_pairs | {(q, p) for p, q in inv_pairs}),
         "p string, q string",
     )
-    sym = _lit_df(
+    sym = local_relation(
         spark,
         sorted(
             {(s,) for s, p, o in tb_rows
@@ -505,7 +502,8 @@ def _pred_implications(
         elif p == TYPE_PRED and o == SYMMETRIC_CLASS:
             gen += [((s, 1), (s, -1)), ((s, -1), (s, 1))]
     closed = _closure_pairs_py(gen)
-    return tb.sparkSession.createDataFrame(
+    return local_relation(
+        tb.sparkSession,
         [(p, ps, q, qs) for (p, ps), (q, qs) in closed],
         "p string, ps int, q string, qs int",
     )
@@ -565,7 +563,7 @@ def rdfs_owl_entailment(
     domain/range, keeping the typing stratum last."""
     spark = tbox.sparkSession
     tb_rows = _tbox_rows(tbox)
-    tb = _lit_df(
+    tb = local_relation(
         spark, tb_rows, "subject string, predicate string, object string"
     )
     for s, p, o in tb_rows:
@@ -598,7 +596,7 @@ def rdfs_owl_entailment(
         (s, p, o) for s, p, o in tb_rows
         if p in (DOMAIN_PRED, RANGE_PRED, SUBCLASS_PRED)
     ]
-    drc_tbox = _lit_df(
+    drc_tbox = local_relation(
         spark, drc_rows, "subject string, predicate string, object string"
     )
     # rdfs5 materialized: the PURE subPropertyOf closure (the mixed
@@ -615,7 +613,7 @@ def rdfs_owl_entailment(
         )
         .unionByName(tb)
         .unionByName(
-            _lit_df(
+            local_relation(
                 spark,
                 [(s, SUBPROP_PRED, o) for s, o in sub_closed],
                 "subject string, predicate string, object string",
@@ -807,7 +805,7 @@ def _fold_entailment(
         (s, pp, o) for s, pp, o in tb_rows
         if pp in (DOMAIN_PRED, RANGE_PRED, SUBCLASS_PRED)
     ]
-    drc_tbox = _lit_df(
+    drc_tbox = local_relation(
         p.sparkSession, drc_rows,
         "subject string, predicate string, object string",
     )

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.closure import transitive_closure
+from ..workerenv import local_relation
 
 _POS_COLS = ("subject", "predicate", "object")
 _VAR_RE = re.compile(r"\?([A-Za-z_][A-Za-z0-9_]*)")
@@ -678,7 +679,7 @@ def bgp_describe(
             res = t if res is None else res.unionByName(t)
     if iris:
         spark = edges.sparkSession
-        t = spark.createDataFrame([(i,) for i in iris], "r string")
+        t = local_relation(spark, [(i,) for i in iris], "r string")
         res = t if res is None else res.unionByName(t)
     res = res.filter(F.col("r").isNotNull()).distinct()
     subj = edges.join(

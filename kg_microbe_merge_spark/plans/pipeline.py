@@ -3,8 +3,8 @@ per-partition lineage metrics.
 
 Stages (BASELINE.json north_star), each committed:
   corpus → triples (fused text extraction + SVO, one Arrow hop) →
-  linked → components (same_as CC) → canonical_triples →
-  kgx_edges / kgx_nodes.
+  linked → components (same_as CC, solved from the alias groups of the
+  prior ≥ 0.5 dictionary) → canonical_triples → kgx_edges / kgx_nodes.
 
 Checkpoint/resume: each stage commits its output as a parquet snapshot
 directory plus a ``_STAGE_MANIFEST.json`` entry (stage name, input
@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.linking import link_mentions, same_as_candidates
+from ..functions.linking import link_mentions
 from ..functions.triples import triples_from_corpus
-from ..operators.components import connected_components
+from ..operators.components import alias_group_components
 from ..operators.merge import (
     edges_merge_provenance,
     infer_category,
@@ -241,10 +241,10 @@ def run_pipeline(
     # fixture plants prior-0.1 cross-entity aliases): without it two
     # distinct entities sharing a weak alias would over-merge into one
     # canonical id.
-    same_as = same_as_candidates(aliases, min_prior=0.5)
+    same_as = aliases.filter(F.col("prior") >= 0.5).select("alias", "entity_id")
     mapping = run.stage(
         "components",
-        lambda: connected_components(same_as),
+        lambda: alias_group_components(same_as),
         fp,
         metrics_key="node",
     )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..functions.triples import VERB_LEXICON
+from ..workerenv import local_relation
 
 N_ENTITIES = 500
 N_HUBS = 5
@@ -182,7 +183,8 @@ def ground_truth_triples(spark: SparkSession, n_docs: int, seed: int = 42) -> Da
 
 
 def alias_dictionary(spark: SparkSession) -> DataFrame:
-    """Small broadcastable alias table ``(alias, entity_id, prior)``.
+    """Small broadcastable alias table ``(alias, entity_id, prior)``, a
+    ``LocalRelation`` (no Python worker scans it).
 
     Each surface form maps to its SRCA id (prior 0.9) and SRCB id
     (prior 0.8); every 10th entity's surface also aliases the *next*
@@ -195,4 +197,4 @@ def alias_dictionary(spark: SparkSession) -> DataFrame:
         rows.append((surf, f"SRCB:{i:04d}", 0.8))
         if i % 10 == 0:
             rows.append((surf, f"SRCB:{(i + 1) % N_ENTITIES:04d}", 0.1))
-    return spark.createDataFrame(rows, "alias string, entity_id string, prior double")
+    return local_relation(spark, rows, "alias string, entity_id string, prior double")

@@ -32,12 +32,27 @@ imports the package). It is idempotent and safe where pyspark itself is
 only importable from the zip (real clusters): the zipimporter stays on
 ``sys.path`` and still serves imports — only the redundant per-task
 directory re-read is skipped.
+
+The patch cannot reach a worker that never unpickles package code. A
+frame built with ``spark.createDataFrame(<list>)`` is a ``PythonRDD``
+(``sc.parallelize``), so every task that scans it runs in a Python
+worker that only deserializes rows — and pays the re-read again on each
+task. Measured on 4 vCPUs (local[4]), warm, one ``groupBy`` job over the
+1,050-row alias dictionary, process-tree CPU: 1.5–2.2 CPU-s on the
+list-built frame, 0.52–0.59 CPU-s on the same rows built from an Arrow
+table, and 0.62–0.65 CPU-s on the list-built frame once its workers had
+imported the package, which pins the cost on the re-read. Driver-built
+frames therefore go through
+:func:`local_relation`: Spark keeps an Arrow-built frame under
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) as a
+``LocalRelation`` and scans it in the JVM, with no Python worker.
 """
 
 from __future__ import annotations
 
 import os
 import zipimport
+from collections.abc import Iterable
 
 _STAMP_ATTR = "_kg_zip_stamp"
 
@@ -68,3 +83,29 @@ def patch_zipimporter_invalidate_caches() -> bool:
     invalidate_caches.__wrapped__ = orig  # type: ignore[attr-defined]
     zi.invalidate_caches = invalidate_caches  # type: ignore[method-assign]
     return True
+
+
+def local_relation(spark, rows: Iterable[tuple], schema):
+    """``spark.createDataFrame(rows, schema)`` built from a ``pyarrow``
+    table, so a frame under the local-relation threshold is a
+    ``LocalRelation`` scanned in the JVM (see the module docstring).
+    ``schema`` is a ``StructType`` or a DDL string; the frame keeps its
+    types and nullability. Above the threshold Spark splits the table
+    into ``arrow.maxRecordsPerBatch``-row partitions, which are coalesced
+    to the default parallelism: 2M two-id rows written to parquet on 4
+    vCPUs took 6.2–7.5 s and 14.9–19.2 CPU-s as 200 partitions (200
+    files), 2.9–3.0 s and 4.9–5.2 CPU-s as 4."""
+    # imported here: every Python worker imports this module
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    df = spark.createDataFrame(table, schema)
+    return df if df.isLocal() else df.coalesce(spark.sparkContext.defaultParallelism)

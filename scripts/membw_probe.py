@@ -112,8 +112,10 @@ def main() -> None:
         "measured_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
     }
     print(json.dumps(out))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/membw_roofline.json", "w") as f:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench = os.path.join(root, "BENCH")
+    os.makedirs(bench, exist_ok=True)
+    with open(os.path.join(bench, "membw_roofline.json"), "w") as f:
         json.dump(out, f, indent=1)
 
 

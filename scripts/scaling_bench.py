@@ -20,7 +20,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+BENCH_DIR = os.path.join(ROOT, "BENCH")
 
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 400000
 LEVELS = tuple(
@@ -62,7 +64,7 @@ def _run(script: str, *args: str, cores: int | None = None) -> dict:
                 cmd,
                 capture_output=True,
                 text=True,
-                cwd="/root/repo",
+                cwd=ROOT,
                 check=True,
                 timeout=LEVEL_TIMEOUT,
                 env={**os.environ, "SCALING_RUNS": RUNS},
@@ -154,8 +156,8 @@ def main() -> None:
     }
     print(json.dumps(summary))
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling_last.json", "w") as f:
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    with open(os.path.join(BENCH_DIR, "scaling_last.json"), "w") as f:
         json.dump(summary, f)
 
     # Windows archive: measured pair efficiencies swing with sandbox
@@ -164,19 +166,19 @@ def main() -> None:
     # engine. Every run appends here and BASELINE.md renders the full
     # distribution, so the claim rests on all windows, not the best one.
     summary["measured_at"] = time.strftime("%Y-%m-%dT%H:%M:%S")
-    with open("/root/repo/BENCH/scaling_windows.jsonl", "a") as f:
+    with open(os.path.join(BENCH_DIR, "scaling_windows.jsonl"), "a") as f:
         f.write(json.dumps(summary) + "\n")
     windows = []
-    with open("/root/repo/BENCH/scaling_windows.jsonl") as f:
+    with open(os.path.join(BENCH_DIR, "scaling_windows.jsonl")) as f:
         for line in f:
             if line.strip():
                 windows.append(json.loads(line))
 
     import scaling_report
 
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(BENCH_DIR, "BASELINE.md"), "w") as f:
         f.write(scaling_report.render(summary, windows))
-    print("wrote /root/repo/BENCH/BASELINE.md")
+    print(f"wrote {os.path.join(BENCH_DIR, 'BASELINE.md')}")
 
 
 if __name__ == "__main__":

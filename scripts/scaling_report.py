@@ -14,7 +14,9 @@ from __future__ import annotations
 import json
 import os
 
-BENCH_DIR = "/root/repo/BENCH"
+BENCH_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"
+)
 
 
 def _rng(windows: list[dict], key: str, pair: str) -> str:

@@ -221,6 +221,26 @@ def test_describe_variable_and_iri(spark):
                     ("c1", "owns", "o2")}
 
 
+def test_describe_constant_iris_from_local_relation(spark):
+    """Constant IRIs describe exactly their incident triples; the IRIs are
+    a JVM-scanned local relation, not a Python RDD."""
+    from kg_microbe_merge_spark.plans.bgp import bgp_describe
+
+    g = _graph(spark)
+    iris = ["n1", "o3", "zz"]
+    out = bgp_describe(g, [], describe=iris)
+    want = {t for t in map(tuple, g.collect()) if t[0] in iris or t[2] in iris}
+    assert sorted(map(tuple, out.collect())) == sorted(want)
+    assert want == {("c1", "in", "n1"), ("c2", "in", "n1"), ("c2", "owns", "o3")}
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    iri_leaves = [
+        leaves.apply(i) for i in range(leaves.size())
+        if leaves.apply(i).output().apply(0).name() == "r"
+    ]
+    assert iri_leaves
+    assert {p.getClass().getSimpleName() for p in iri_leaves} == {"LocalRelation"}
+
+
 def test_describe_guards(spark):
     from kg_microbe_merge_spark.plans.bgp import bgp_describe
 

@@ -4,7 +4,9 @@ propagation depth; star — worst case for hub skew; mixed forest).
 
 Every oracle check runs both solve paths: the driver-side union-find
 that inputs up to ``components._DRIVER_THRESHOLD`` edges take, and the
-distributed star rounds, forced by patching that threshold to 0.
+distributed star rounds, forced by patching that threshold to 0. The
+alias-group entry point (``alias_group_components``) is checked against
+the same oracle over the pairwise ``same_as`` graph of its groups.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 
 from kg_microbe_merge_spark.operators import components
 from kg_microbe_merge_spark.operators.components import (
+    alias_group_components,
     canonicalize_ids,
     connected_components,
     connected_components_incremental,
@@ -124,6 +127,74 @@ def test_cc_random_graphs(spark, seed):
     ]
     edges = [e for e in edges if e[0] != e[1]]
     _check(spark, edges)
+
+
+def _group_oracle(rows: list[tuple]) -> dict[str, str]:
+    """The pairwise encoding: every two distinct non-null members of a
+    non-null alias are a ``same_as`` edge."""
+    groups: dict = {}
+    for a, x in rows:
+        if a is not None and x is not None:
+            groups.setdefault(a, set()).add(x)
+    return _oracle([(x, y) for g in groups.values() for x in g for y in g if x < y])
+
+
+def _group_check(spark, rows: list[tuple]) -> None:
+    df = spark.createDataFrame(rows, "alias string, entity_id string")
+    want = _group_oracle(rows)
+    for threshold in THRESHOLDS:
+        with _driver_threshold(threshold):
+            got = alias_group_components(df).collect()
+        assert {r["node"]: r["component"] for r in got} == want, threshold
+        assert len(got) == len(want), threshold
+
+
+@pytest.mark.parametrize("seed", [2, 5])
+def test_alias_groups_random(spark, seed):
+    """Random groups with null aliases and members, singleton groups,
+    duplicate rows and members shared across groups."""
+    rng = random.Random(seed)
+    aliases = [f"al{i:03d}" for i in range(60)] + [None]
+    members = [f"E:{i:03d}" for i in range(90)] + [None]
+    rows = [(rng.choice(aliases), rng.choice(members)) for _ in range(150)]
+    rows += rng.sample(rows, 20) + [("solo", "E:500"), ("solo", "E:500")]
+    _group_check(spark, rows)
+
+
+def test_alias_groups_duplicates_and_nulls(spark):
+    rows = [
+        ("x", "b"), ("x", "b"), ("x", "a"),  # a group with a duplicate
+        ("y", "c"), ("y", "c"),  # one distinct member: no rows
+        ("z", "c"), ("z", "b"),  # c joins {a, b} through b
+        (None, "d"), (None, "e"),  # a null alias links nothing
+        ("w", None), ("w", "f"),  # a null member links nothing
+    ]
+    _group_check(spark, rows)
+    want = {"a": "a", "b": "a", "c": "a"}
+    assert _group_oracle(rows) == want
+
+
+def test_generic_alias_stays_on_driver(spark, monkeypatch):
+    """One alias over 1,500 entities is 1,500 dictionary rows, not the
+    1,124,750 pairs that would push the solve past the driver cap."""
+    rows = [("generic", f"G:{i:04d}") for i in range(1500)]
+    rows += [(f"s{i}", f"A:{i:03d}") for i in range(300)]
+    rows += [(f"s{i}", f"B:{i:03d}") for i in range(300)]
+    rows += [("s7", "G:0042")]
+
+    def no_star(*_):
+        raise AssertionError("star rounds ran")
+
+    monkeypatch.setattr(components, "_star_components", no_star)
+    df = spark.createDataFrame(rows, "alias string, entity_id string")
+    got = {r["node"]: r["component"] for r in alias_group_components(df).collect()}
+    want = _oracle(
+        [("G:0000", f"G:{i:04d}") for i in range(1, 1500)]
+        + [(f"A:{i:03d}", f"B:{i:03d}") for i in range(300)]
+        + [("A:007", "G:0042")]
+    )
+    assert got == want
+    assert got["G:1499"] == "A:007" and got["A:008"] == "A:008"
 
 
 def _edges_df(spark, edges):

@@ -154,3 +154,29 @@ def test_product_import_sets_stay_small(module, limit):
     ).stdout
     loaded = ast.literal_eval(out.strip().splitlines()[-1])
     assert len(loaded) <= limit, loaded
+
+
+def _checkout_paths(path: Path) -> list[str]:
+    """Absolute-path string literals in ``path`` that name this checkout
+    or any directory holding the package."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            p = Path(node.value)
+            if p.is_absolute() and (
+                node.value.startswith(str(ROOT))
+                or any((d / PKG).is_dir() for d in (p, *p.parents))
+            ):
+                found.append(node.value)
+    return found
+
+
+def test_scripts_hold_no_checkout_path():
+    """Scripts find the package and ``BENCH/`` from their own location, so
+    a script run from any checkout imports and writes that checkout."""
+    offenders = {
+        p.name: _checkout_paths(p)
+        for p in sorted((ROOT / "scripts").glob("*.py"))
+        if str(ROOT) in p.read_text() or _checkout_paths(p)
+    }
+    assert not offenders, offenders

@@ -278,3 +278,42 @@ def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
         )
     )
     assert Counter(map(tuple, out["triples"].collect())) == want and want
+
+
+def _leaf_classes(df) -> list[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def test_stage_frames_scan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """No stage plan scans a Python RDD: a ``LogicalRDD`` leaf (what
+    ``createDataFrame(<list>)`` builds) runs every task that scans it in a
+    Python worker, though the job runs no UDF. The dictionary and a
+    driver-solved components result are JVM-scanned local relations."""
+    from kg_microbe_merge_spark.operators.components import connected_components
+    from kg_microbe_merge_spark.plans.pipeline import PipelineRun
+    from kg_microbe_merge_spark.sources.corpus import alias_dictionary
+
+    leaves = {}
+    stage = PipelineRun.stage
+
+    def capturing_stage(self, name, build, *args, **kwargs):
+        def capture():
+            df = build()
+            leaves[name] = _leaf_classes(df)
+            return df
+
+        return stage(self, name, capture, *args, **kwargs)
+
+    monkeypatch.setattr(PipelineRun, "stage", capturing_stage)
+    run_pipeline(spark, str(tmp_path / "wd"), n_docs=40, seed=3)
+    assert set(leaves) == {
+        "corpus", "triples", "linked", "components",
+        "canonical_triples", "kgx_edges", "kgx_nodes",
+    }
+    assert not {n: ls for n, ls in leaves.items() if "LogicalRDD" in ls}, leaves
+    assert leaves["components"] == ["LocalRelation"]
+
+    assert _leaf_classes(alias_dictionary(spark)) == ["LocalRelation"]
+    edges = spark.createDataFrame([("a", "b"), ("c", None)], "src string, dst string")
+    assert _leaf_classes(connected_components(edges)) == ["LocalRelation"]

@@ -1,5 +1,6 @@
 """ANN similarity search (LSH recall vs brute force) and entity-linking
-semantics (ambiguity resolution, unlinked fallback, same_as candidates).
+semantics (ambiguity resolution, unlinked fallback, same_as components
+of shared aliases).
 """
 
 from __future__ import annotations
@@ -9,8 +10,8 @@ import numpy as np
 from kg_microbe_merge_spark.functions.linking import (
     link_mentions,
     resolve_alias_dictionary,
-    same_as_candidates,
 )
+from kg_microbe_merge_spark.operators.components import alias_group_components
 from kg_microbe_merge_spark.operators.similarity import (
     brute_force_cosine_topk,
     lsh_cosine_topk,
@@ -114,11 +115,14 @@ def test_link_mentions_fallback_and_scores(spark):
     assert out["d2"]["obj"] == "FRUIT:1"
 
 
-def test_same_as_candidates(spark):
-    cands = {
-        (r["src"], r["dst"]) for r in same_as_candidates(_aliases(spark)).collect()
+def test_alias_group_components(spark):
+    """Two entity ids sharing an alias are one ``same_as`` component; an
+    alias with one entity links nothing."""
+    rows = {
+        (r["node"], r["component"])
+        for r in alias_group_components(_aliases(spark)).collect()
     }
-    assert cands == {("COMPANY:1", "FRUIT:1")}
+    assert rows == {("COMPANY:1", "COMPANY:1"), ("FRUIT:1", "COMPANY:1")}
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):

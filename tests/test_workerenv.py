@@ -100,3 +100,41 @@ def test_patch_reaches_python_workers(spark):
         .all_ok
     )
     assert out is True
+
+
+def test_local_relation_keeps_rows_types_and_nullability(spark):
+    from pyspark.sql import types as T
+
+    from kg_microbe_merge_spark.workerenv import local_relation
+
+    schema = T.StructType([
+        T.StructField("id", T.StringType(), False),
+        T.StructField("n", T.IntegerType(), True),
+        T.StructField("x", T.DoubleType(), True),
+    ])
+    rows = [("a", 1, 0.5), ("b", None, None), ("a", 1, 0.5)]
+    df = local_relation(spark, rows, schema)
+    assert df.isLocal() and df.schema == schema
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_relation(spark, [], "r string")
+    assert empty.isLocal() and empty.collect() == []
+    assert empty.schema.simpleString() == "struct<r:string>"
+
+
+def test_local_relation_above_threshold_is_coalesced(spark):
+    """Above ``arrow.localRelationThreshold`` the Arrow table becomes one
+    partition per ``maxRecordsPerBatch`` rows; those are coalesced to the
+    default parallelism."""
+    from kg_microbe_merge_spark.workerenv import local_relation
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        rows = [(f"n{i:06d}", i) for i in range(50_000)]
+        df = local_relation(spark, rows, "node string, i long")
+        assert not df.isLocal()
+        assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+        assert sorted(tuple(r) for r in df.collect()) == rows
+    finally:
+        spark.conf.set(key, old)
