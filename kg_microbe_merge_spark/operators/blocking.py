@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kg_microbe_merge_spark.functions.text import normalized_text
+from kg_microbe_merge_spark.workerenv import local_relation
 
 
 def name_tokens(
@@ -259,8 +260,8 @@ def blocking_metrics(
     def _micro(num, den):
         return int((2 * MICRO_I * num + den) // (2 * den)) if den else 0
 
-    spark = candidates.sparkSession
-    return spark.createDataFrame(
+    return local_relation(
+        candidates.sparkSession,
         [
             (
                 n_cand,

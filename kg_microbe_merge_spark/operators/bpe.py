@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from ..workerenv import local_relation
 
 #: end-of-word marker symbol (contains no spaces — safe in the wrapped
 #: representation)
@@ -191,8 +192,8 @@ def merges_df(spark: SparkSession, merges) -> DataFrame:
             StructField("n", LongType()),
         ]
     )
-    return spark.createDataFrame(
-        [(int(r), l, h, int(n)) for r, l, h, n in merges], schema
+    return local_relation(
+        spark, [(int(r), l, h, int(n)) for r, l, h, n in merges], schema
     )
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60_sql
+from ..workerenv import local_relation
 from .mis import _und, maximal_independent_set
 
 
@@ -102,8 +103,7 @@ def greedy_coloring(
         # empty / all-self-loop edge relation: no node is incident to
         # an undirected edge, so the coloring is the empty relation —
         # not None, which would crash callers that .show()/.collect()
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, color int")
+        return local_relation(edges.sparkSession, [], "node string, color int")
     return out
 
 

@@ -99,6 +99,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 # Largest edge count solved on the driver; see "Scale notes".
 _DRIVER_THRESHOLD = 1_000_000
+# Default bound on the star rounds of the distributed solve.
+_MAX_ROUNDS = 50
 
 
 def _union_find(pairs) -> list[tuple]:
@@ -131,7 +133,7 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
+    max_iterations: int = _MAX_ROUNDS,
 ) -> DataFrame:
     """Return ``(node, component)`` where ``component`` is the minimum
     node id in each connected component.
@@ -148,7 +150,7 @@ def connected_components(
     return _solve(probe, lambda rows: rows, lambda e: e, max_iterations)
 
 
-def alias_group_components(aliases: DataFrame, max_iterations: int = 50) -> DataFrame:
+def alias_group_components(aliases: DataFrame) -> DataFrame:
     """:func:`connected_components` of the ``same_as`` graph in which the
     ``entity_id``s sharing an ``alias`` are linked, solved from the groups
     without expanding them into pairs. Only members of groups with at
@@ -163,7 +165,7 @@ def alias_group_components(aliases: DataFrame, max_iterations: int = 50) -> Data
     probe = aliases.select("alias", F.col("entity_id").alias("node")).filter(
         F.col("alias").isNotNull() & F.col("node").isNotNull()
     )
-    return _solve(probe, _group_edges, _group_star_edges, max_iterations)
+    return _solve(probe, _group_edges, _group_star_edges, _MAX_ROUNDS)
 
 
 def _group_edges(rows):
@@ -274,7 +276,7 @@ def connected_components_incremental(
     delta_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 50,
+    max_iterations: int = _MAX_ROUNDS,
 ) -> DataFrame:
     """Fold a batch of NEW ``same_as`` edges into an existing
     ``(node, component)`` assignment without recomputing over the full

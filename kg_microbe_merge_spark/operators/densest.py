@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..workerenv import local_relation
+
 
 class PeelDepthExceeded(RuntimeError):
     """Peeling did not exhaust the graph within max_rounds."""
@@ -133,7 +135,8 @@ def densest_subgraph(
         rnd += 1
 
     if not stats:
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [],
             "node string, density_micro bigint, n_nodes bigint, "
             "n_edges bigint",

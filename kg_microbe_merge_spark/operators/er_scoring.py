@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..workerenv import local_relation
+
 MICRO = 1_000_000
 
 
@@ -271,7 +273,8 @@ def fs_em_weights(
                 ),
             )
         )
-    weights_df = pairs.sparkSession.createDataFrame(
+    weights_df = local_relation(
+        pairs.sparkSession,
         rows,
         "feature string, m_micro long, u_micro long, "
         "w_agree_micro long, w_disagree_micro long",

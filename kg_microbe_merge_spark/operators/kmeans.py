@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60
+from ..workerenv import local_relation
 
 
 def _dist2(vec: Column, centroid: list[float]) -> Column:
@@ -99,7 +100,7 @@ def kmeans_assignments(
         .collect()
     )
     if not init_rows:
-        return v.sparkSession.createDataFrame([], "vec_id long, cluster int")
+        return local_relation(v.sparkSession, [], "vec_id long, cluster int")
     centroids = [list(r["_v"]) for r in init_rows]
 
     assigned = _assign(v, centroids)

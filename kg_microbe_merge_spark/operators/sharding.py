@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import hash60
+from ..workerenv import local_relation
 
 
 def assign_shards(
@@ -72,9 +73,8 @@ def assign_shards(
     for b in sorted(per_bucket):
         offsets.append((b, acc))
         acc += per_bucket[b]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets, "_bucket LONG, _offset LONG"
+    off_df = local_relation(
+        df.sparkSession, offsets, "_bucket LONG, _offset LONG"
     )
     w = (
         Window.partitionBy("_bucket")

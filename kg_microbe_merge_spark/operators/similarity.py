@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..workerenv import local_relation
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -244,8 +246,10 @@ def ivf_cosine_topk(
         .collect()
     )
     if not cent_rows:
-        return v.sparkSession.createDataFrame(
-            [], "query_id string, vec_id string, cosine double, rank int"
+        return local_relation(
+            v.sparkSession,
+            [],
+            "query_id string, vec_id string, cosine double, rank int",
         )
     # argmax iteration in ascending-cid order → smallest cid wins exact
     # cosine ties, mirroring the oracle's ORDER BY cos DESC, cid ASC

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import hash60
+from ..workerenv import local_relation
 
 
 def corpus_token_stream(
@@ -98,10 +99,10 @@ def corpus_token_stream(
         acc += per_bucket[b]
     spark = docs.sparkSession
     if not offsets:
-        return spark.createDataFrame(
-            [], "pos long, doc_id string, doc_pos int, token string"
+        return local_relation(
+            spark, [], "pos long, doc_id string, doc_pos int, token string"
         )
-    off_df = spark.createDataFrame(offsets, "_bucket LONG, _offset LONG")
+    off_df = local_relation(spark, offsets, "_bucket LONG, _offset LONG")
 
     w = (
         Window.partitionBy("_bucket")
@@ -154,7 +155,7 @@ def suffix_ranks(
     (:func:`corpus_token_stream` produces them)."""
     n, levels = _rank_levels(tokens, pos_col, token_col, max_rounds)
     if n == 0:
-        return tokens.sparkSession.createDataFrame([], "pos long, rank long")
+        return local_relation(tokens.sparkSession, [], "pos long, rank long")
     return levels[-1][1]
 
 
@@ -251,8 +252,8 @@ def lcp_adjacent(
     n, levels = _rank_levels(tokens, pos_col, token_col)
     spark = tokens.sparkSession
     if n < 2:
-        return spark.createDataFrame(
-            [], "rank long, pos long, prev_pos long, lcp long"
+        return local_relation(
+            spark, [], "rank long, pos long, prev_pos long, lcp long"
         )
     final = levels[-1][1]
     nxt = final.select(

@@ -237,10 +237,10 @@ def run_pipeline(
         fp,
         metrics_key="subj",
     )
-    # min_prior gates out low-confidence ambiguous aliases (the corpus
-    # fixture plants prior-0.1 cross-entity aliases): without it two
-    # distinct entities sharing a weak alias would over-merge into one
-    # canonical id.
+    # The prior >= 0.5 filter gates out low-confidence ambiguous aliases
+    # (the corpus fixture plants prior-0.1 cross-entity aliases): without
+    # it two distinct entities sharing a weak alias would over-merge into
+    # one canonical id.
     same_as = aliases.filter(F.col("prior") >= 0.5).select("alias", "entity_id")
     mapping = run.stage(
         "components",
