@@ -34,7 +34,7 @@ operator is the final ``distinct`` on the output triples, and that is
 irreducible (entailment IS a set). TBox closures are computed DRIVER-
 side (:func:`_closure_pairs_py` — the TBox is broadcast-class by
 contract, so its closure costs zero Spark jobs; ABox-scale closures
-stay distributed via :func:`_closure_by_pred`).
+stay distributed in :mod:`.closure`).
 
 Output-size honesty: entailment multiplies rows by the hierarchy
 depth along each triple's predicate/class chain (Biolink: ≤ ~10).
@@ -58,7 +58,7 @@ SUBPROP_PRED = "rdfs:subPropertyOf"
 DOMAIN_PRED = "rdfs:domain"
 RANGE_PRED = "rdfs:range"
 
-#: OWL-lite property-semantics vocabulary (see :func:`owl_saturate`).
+#: OWL-lite property-semantics vocabulary (see :func:`rdfs_owl_entailment`).
 INVERSE_PRED = "owl:inverseOf"
 SYMMETRIC_CLASS = "owl:SymmetricProperty"
 TRANSITIVE_CLASS = "owl:TransitiveProperty"
@@ -106,7 +106,7 @@ def _closure_pairs_py(pairs: list[tuple]) -> list[tuple]:
     the distributed doubling loop with zero jobs — the same
     dimension-data-inlined-at-the-driver pattern as the IVF centroids
     and the entity-linking dictionary. ABox-scale closures stay
-    distributed (:func:`_closure_by_pred`, :mod:`..closure`)."""
+    distributed (:mod:`.closure`)."""
     adj: dict = {}
     for s, d in pairs:
         adj.setdefault(s, set()).add(d)
@@ -275,7 +275,6 @@ def rdfs_entailment(
     tbox: DataFrame,
     type_pred: str = TYPE_PRED,
     include_asserted: bool = True,
-    max_iterations: int = 30,
     tb_rows: list[tuple[str, str, str]] | None = None,
 ) -> DataFrame:
     """Materialize the RDFS-lite entailed graph of ``abox`` under
@@ -338,55 +337,38 @@ def rdfs_entailment_provenance(
     )
 
 
-def _closure_by_pred(edges: DataFrame, max_iterations: int = 30) -> DataFrame:
+def _keyed(t: DataFrame) -> DataFrame:
+    """(subject, predicate, object) → src = (predicate, subject),
+    dst = (predicate, object): with the predicate inside both endpoints,
+    a path in :mod:`.closure` chains only within one predicate, so all
+    transitive predicates close in the same loop."""
+    return t.select(
+        F.struct("predicate", "subject").alias("src"),
+        F.struct("predicate", "object").alias("dst"),
+    )
+
+
+def _unkeyed(r: DataFrame) -> DataFrame:
+    return r.select(
+        F.col("src.subject").alias("subject"),
+        F.col("src.predicate").alias("predicate"),
+        F.col("dst.object").alias("object"),
+    )
+
+
+def _closure_by_pred(edges: DataFrame) -> DataFrame:
     """Per-predicate transitive closure of a (subject, predicate,
-    object) relation by path doubling — the multi-relation twin of
-    :func:`..closure.transitive_closure` (predicate rides in the join
-    key, so ALL transitive predicates close in the same log-round
-    loop instead of one driver loop per predicate). Runs with
-    constraint propagation scope-disabled: the input carries a literal
-    predicate-IN filter whose constraint attributes trip Catalyst's
-    checkpoint stats rewrite (guards.constraint_propagation_disabled);
-    every returned plan is eagerly checkpointed, nothing lazy escapes
-    the scope."""
+    object) relation: :func:`.closure.transitive_closure` over
+    :func:`_keyed` rows. Runs with constraint propagation
+    scope-disabled: the input carries a literal predicate-IN filter
+    whose constraint attributes trip Catalyst's checkpoint stats
+    rewrite (guards.constraint_propagation_disabled); the closure is
+    eagerly checkpointed, so nothing lazy escapes the scope."""
+    from .closure import transitive_closure
     from .guards import constraint_propagation_disabled
 
     with constraint_propagation_disabled(edges.sparkSession):
-        return _closure_by_pred_inner(edges, max_iterations)
-
-
-def _closure_by_pred_inner(
-    edges: DataFrame, max_iterations: int = 30
-) -> DataFrame:
-    r = edges.select("subject", "predicate", "object").distinct().localCheckpoint(
-        eager=True
-    )
-    n = r.count()
-    for _ in range(max_iterations):
-        if n == 0:
-            return r
-        two = (
-            r.alias("a")
-            .join(
-                r.alias("b"),
-                (F.col("a.object") == F.col("b.subject"))
-                & (F.col("a.predicate") == F.col("b.predicate")),
-            )
-            .select(
-                F.col("a.subject").alias("subject"),
-                F.col("a.predicate").alias("predicate"),
-                F.col("b.object").alias("object"),
-            )
-        )
-        r = r.unionByName(two).distinct().localCheckpoint(eager=True)
-        n_next = r.count()
-        if n_next == n:
-            return r
-        n = n_next
-    raise UnsupportedTBoxError(
-        f"transitive-property closure still growing after "
-        f"{max_iterations} doubling rounds"
-    )
+        return _unkeyed(transitive_closure(_keyed(edges)))
 
 
 def _pred_in(preds: list[str]) -> F.Column:
@@ -395,87 +377,8 @@ def _pred_in(preds: list[str]) -> F.Column:
     return F.col("predicate").isin(*preds) if preds else F.lit(False)
 
 
-def owl_saturate(
-    triples: DataFrame,
-    tbox: DataFrame,
-    max_iterations: int = 30,
-    tb_rows: list[tuple[str, str, str]] | None = None,
-) -> DataFrame:
-    """OWL-lite property saturation: ``owl:inverseOf``,
-    ``owl:SymmetricProperty``, ``owl:TransitiveProperty`` applied to a
-    triple set, returning the input plus every derived triple.
-
-    Rule order is a PROVEN fixpoint for any combination of the three:
-    (1) inverse + symmetric over the asserted triples, (2) one
-    per-predicate transitive closure over the transitive predicates'
-    edges (predicate rides in the doubling join key — all transitive
-    predicates close together), (3) inverse + symmetric once more over
-    the closure's new rows. Step 3 exists because OWL applies
-    inverseOf/symmetry to ENTAILED triples too — the inverse of a
-    closure is the closure of the inverse, so one post-pass suffices;
-    a symmetric relation's closure is already symmetric, so the
-    re-application is idempotent there. No loop over the ABox, ever.
-
-    100 TB shape: inverse/symmetric are broadcast-joined row-local
-    rewrites (one scan each); the closure touches ONLY the transitive
-    predicates' edge subset (literal predicate-IN filter — pushed to
-    the scan, no join). Schema relations derive driver-side from one
-    TBox collect. The closure's output-size honesty from
-    operators/closure.py applies per transitive predicate."""
-    spark = tbox.sparkSession
-    if tb_rows is None:
-        tb_rows = _tbox_rows(tbox)
-    inv_pairs = {
-        (s, o) for s, p, o in tb_rows if p == INVERSE_PRED
-    }
-    # inverseOf is symmetric in p/q: apply both directions
-    inv_both = local_relation(
-        spark,
-        sorted(inv_pairs | {(q, p) for p, q in inv_pairs}),
-        "p string, q string",
-    )
-    sym = local_relation(
-        spark,
-        sorted(
-            {(s,) for s, p, o in tb_rows
-             if p == TYPE_PRED and o == SYMMETRIC_CLASS}
-        ),
-        "p string",
-    )
-    trans_preds = sorted(
-        {s for s, p, o in tb_rows
-         if p == TYPE_PRED and o == TRANSITIVE_CLASS}
-    )
-
-    def _inv_sym(t: DataFrame) -> DataFrame:
-        inverted = (
-            t.join(F.broadcast(inv_both), t["predicate"] == inv_both["p"])
-            .select(
-                F.col("object").alias("subject"),
-                F.col("q").alias("predicate"),
-                F.col("subject").alias("object"),
-            )
-        )
-        mirrored = (
-            t.join(F.broadcast(sym), t["predicate"] == sym["p"])
-            .select(
-                F.col("object").alias("subject"),
-                "predicate",
-                F.col("subject").alias("object"),
-            )
-        )
-        return t.unionByName(inverted).unionByName(mirrored)
-
-    a = triples.select("subject", "predicate", "object")
-    step1 = _inv_sym(a).distinct()
-    t_edges = step1.filter(_pred_in(trans_preds))
-    closed = _closure_by_pred(t_edges, max_iterations)
-    return _inv_sym(step1.unionByName(closed)).distinct()
-
-
 def _pred_implications(
     tb: DataFrame,
-    max_iterations: int = 30,
     tb_rows: list[tuple[str, str, str]] | None = None,
 ) -> DataFrame:
     """Closed SIGNED predicate-implication lattice: (p, psign, q, qsign)
@@ -535,7 +438,6 @@ def rdfs_owl_entailment(
     tbox: DataFrame,
     type_pred: str = TYPE_PRED,
     include_asserted: bool = True,
-    max_iterations: int = 30,
 ) -> DataFrame:
     """RDFS-lite + OWL-lite property semantics (``owl:inverseOf``,
     ``owl:SymmetricProperty``, ``owl:TransitiveProperty``), COMPLETE
@@ -575,7 +477,7 @@ def rdfs_owl_entailment(
                 "it a domain/range — the typing stratum must stay "
                 "last; use a fixpoint Datalog materializer"
             )
-    impl = _pred_implications(tb, max_iterations, tb_rows)
+    impl = _pred_implications(tb, tb_rows)
     trans_preds = sorted(
         {s for s, p, o in tb_rows
          if p == TYPE_PRED and o == TRANSITIVE_CLASS}
@@ -588,7 +490,7 @@ def rdfs_owl_entailment(
     )
     mapped = _apply_implications(a, impl).distinct()
     t_edges = mapped.filter(_pred_in(trans_preds))
-    closed = _closure_by_pred(t_edges, max_iterations)
+    closed = _closure_by_pred(t_edges)
     sat = _apply_implications(mapped.unionByName(closed), impl).distinct()
 
     # typing stratum over the saturated set (driver-derived TBox subset)
@@ -608,8 +510,7 @@ def rdfs_owl_entailment(
     )
     out = (
         rdfs_entailment(
-            sat, drc_tbox, type_pred, True, max_iterations,
-            tb_rows=drc_rows,
+            sat, drc_tbox, type_pred, True, tb_rows=drc_rows,
         )
         .unionByName(tb)
         .unionByName(
@@ -630,81 +531,16 @@ def rdfs_owl_entailment(
 
 
 def _incremental_closure_by_pred(
-    closed: DataFrame, delta: DataFrame, max_iterations: int = 30
+    closed: DataFrame, delta: DataFrame
 ) -> DataFrame:
-    """Per-predicate incremental reachability fold — the
-    (subject, predicate, object) twin of
-    :func:`..closure.incremental_closure` (predicate rides in every
-    join key). ``closed`` must be per-predicate transitively closed;
-    returns ``_closure_by_pred(closed ∪ delta)`` with work
-    proportional to the new paths."""
-    from .guards import constraint_propagation_disabled
+    """Per-predicate incremental reachability fold:
+    :func:`.closure.incremental_closure` over :func:`_keyed` rows.
+    ``closed`` must be per-predicate transitively closed; returns
+    ``_closure_by_pred(closed ∪ delta)`` with work proportional to the
+    new paths."""
+    from .closure import incremental_closure
 
-    keys = ["subject", "predicate", "object"]
-    with constraint_propagation_disabled(closed.sparkSession):
-        return _fold_closure_by_pred(closed, delta, keys, max_iterations)
-
-
-def _fold_closure_by_pred(
-    closed: DataFrame, delta: DataFrame, keys, max_iterations: int
-) -> DataFrame:
-    acc = closed.select(*keys).distinct().localCheckpoint(eager=True)
-    frontier = (
-        delta.select(*keys)
-        .distinct()
-        .join(acc, keys, "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    grew = False
-    for _ in range(max_iterations):
-        if frontier.limit(1).count() == 0:
-            # checkpoint the layered union so the caller's plan is a
-            # plain scan (independent of the constraint-conf scope)
-            return acc.localCheckpoint(eager=True) if grew else acc
-        grew = True
-        known = acc.unionByName(frontier)
-        left_ext = (
-            known.alias("a")
-            .join(
-                frontier.alias("f"),
-                (F.col("a.object") == F.col("f.subject"))
-                & (F.col("a.predicate") == F.col("f.predicate")),
-            )
-            .select(
-                F.col("a.subject").alias("subject"),
-                F.col("a.predicate").alias("predicate"),
-                F.col("f.object").alias("object"),
-            )
-        )
-        right_ext = (
-            frontier.alias("f")
-            .join(
-                known.alias("a"),
-                (F.col("f.object") == F.col("a.subject"))
-                & (F.col("f.predicate") == F.col("a.predicate")),
-            )
-            .select(
-                F.col("f.subject").alias("subject"),
-                F.col("f.predicate").alias("predicate"),
-                F.col("a.object").alias("object"),
-            )
-        )
-        # acc stays a plain union of already-checkpointed layers — a
-        # checkpoint OF the union both re-materializes data the layers
-        # already hold and trips Catalyst attribute-rebinding when the
-        # two sides share lineage (e.g. snapshot and delta split from
-        # one DataFrame)
-        acc = known
-        frontier = (
-            left_ext.unionByName(right_ext)
-            .distinct()
-            .join(acc, keys, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-    raise UnsupportedTBoxError(
-        "incremental transitive-property closure still growing after "
-        f"{max_iterations} rounds"
-    )
+    return _unkeyed(incremental_closure(_keyed(closed), _keyed(delta)))
 
 
 def incremental_entailment(
@@ -712,7 +548,6 @@ def incremental_entailment(
     delta_abox: DataFrame,
     tbox: DataFrame,
     type_pred: str = TYPE_PRED,
-    max_iterations: int = 30,
 ) -> DataFrame:
     """Fold a DELTA ABox batch into a previously materialized
     entailment: returns ``rdfs_owl_entailment(abox ∪ delta, tbox)``
@@ -748,7 +583,7 @@ def incremental_entailment(
         eager=True
     )
     with constraint_propagation_disabled(prev.sparkSession):
-        return _fold_entailment(p, delta_abox, tb, type_pred, max_iterations)
+        return _fold_entailment(p, delta_abox, tb, type_pred)
 
 
 def _fold_entailment(
@@ -756,10 +591,9 @@ def _fold_entailment(
     delta_abox: DataFrame,
     tb: DataFrame,
     type_pred: str,
-    max_iterations: int,
 ) -> DataFrame:
     tb_rows = _tbox_rows(tb)
-    impl = _pred_implications(tb, max_iterations, tb_rows)
+    impl = _pred_implications(tb, tb_rows)
     trans_preds = sorted(
         {s for s, p, o in tb_rows
          if p == TYPE_PRED and o == TRANSITIVE_CLASS}
@@ -786,7 +620,7 @@ def _fold_entailment(
 
     prev_t = p.filter(_pred_in(trans_preds))
     delta_t = mapped_delta.filter(_pred_in(trans_preds))
-    closed = _incremental_closure_by_pred(prev_t, delta_t, max_iterations)
+    closed = _incremental_closure_by_pred(prev_t, delta_t)
     closed_new = closed.join(
         prev_t, ["subject", "predicate", "object"], "left_anti"
     )
@@ -810,8 +644,7 @@ def _fold_entailment(
         "subject string, predicate string, object string",
     )
     typed_new = rdfs_entailment(
-        new_rows, drc_tbox, type_pred, True, max_iterations,
-        tb_rows=drc_rows,
+        new_rows, drc_tbox, type_pred, True, tb_rows=drc_rows,
     )
     # eager checkpoint: the returned snapshot must stand alone outside
     # the constraint-conf scope (and it IS the next fold's base)

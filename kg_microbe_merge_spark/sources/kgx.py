@@ -143,18 +143,10 @@ def write_tsv_dir(df: DataFrame, output_dir: str) -> None:
     df.write.mode("overwrite").options(sep="\t", header=True).csv(output_dir)
 
 
-def write_parquet(
-    df: DataFrame,
-    output_dir: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_parquet(df: DataFrame, output_dir: str) -> None:
     """Columnar materialization (the production sink). Iceberg would be
     ``df.writeTo(table).using("iceberg")`` — the Iceberg runtime jar is
     not in this image, so parquet directories stand in; the layout
-    (partition columns, snapshot-manifest in plans/pipeline.py) mirrors
-    what an Iceberg commit would record."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(output_dir)
+    (snapshot-manifest in plans/pipeline.py) mirrors what an Iceberg
+    commit would record."""
+    df.write.mode("overwrite").parquet(output_dir)

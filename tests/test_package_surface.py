@@ -138,7 +138,12 @@ def test_subpackage_inits_import_nothing():
 
 @pytest.mark.parametrize(
     "module,limit",
-    [("operators.merge", 5), ("plans.pipeline", 13), ("cli", 4)],
+    [
+        ("operators.merge", 5),
+        ("plans.pipeline", 13),
+        ("cli", 4),
+        ("operators.entailment", 4),
+    ],
 )
 def test_product_import_sets_stay_small(module, limit):
     """A fresh interpreter importing a product module loads only the
