@@ -6,8 +6,9 @@ this engine is declarative DataFrame plans optimized by Catalyst).
 
 Layout
 ------
-- ``session``     SparkSession factory tuned for the local[32] sandbox while
-                  keeping cluster-scale defaults (AQE, skew join, Arrow).
+- ``session``     SparkSession factory: sized from the CPUs this process
+                  may run on, with cluster-scale defaults (AQE, skew
+                  join, Arrow).
 - ``sources``     KGX TSV multi-file union loader / sinks, synthetic corpus.
 - ``operators``   merge (nodes group-merge, edge union, coverage check),
                   connected components, dedup family, similarity search,
@@ -21,9 +22,12 @@ Layout
 
 __version__ = "0.1.0"
 
-# Applied at import time so it reaches every Python worker as soon as the
-# worker unpickles any UDF defined in this package — see workerenv docstring
-# for the measured per-task cost this removes.
+# Applied at import time, on the driver and in every Python worker that
+# imports the package. Local sessions fork their workers from
+# ``worker_daemon``, which imports it first; under a non-local master the
+# workers depend on this line, reached when they unpickle a UDF defined in
+# this package — see the workerenv docstring for the per-task cost it
+# removes.
 from kg_microbe_merge_spark.workerenv import (  # noqa: E402
     patch_zipimporter_invalidate_caches,
 )

@@ -9,6 +9,7 @@ timezone so results compare bit-for-bit against the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +26,18 @@ def get_spark(
     shuffle-partition count (≈ 2-3× total cores); every other knob here is
     size-independent policy.
     """
+    spark = _builder(app_name, master, shuffle_partitions, extra_conf).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _builder(
+    app_name: str,
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> SparkSession.Builder:
+    """The configured builder behind :func:`get_spark`; builds no session."""
     # SPARK_GRAFT_CPUS is a deployment override; by default use the CPUs
     # this process may run on
     cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
@@ -55,8 +68,35 @@ def get_spark(
         # ~0.25 s/task Python-worker zip-rescan tax.)
         .config("spark.sql.files.minPartitionNum", str(4 * int(shuffle)))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = extra_conf or {}
+    if master.startswith("local"):
+        conf = _local_worker_conf(conf)
+    for k, v in conf.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return b
+
+
+def _local_worker_conf(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the Python-worker settings of a one-host session.
+
+    The workers fork from :mod:`worker_daemon`, which installs the
+    ``workerenv`` zip-cache patch before the first fork, so no task
+    re-reads ``pyspark.zip``. The daemon and every UDF need the package
+    importable in the workers whatever the driver's cwd, so the directory
+    holding it is appended to the workers' ``PYTHONPATH`` after any
+    caller-set entries. Non-local masters keep ``pyspark.daemon``: their
+    workers get the package from ``--py-files`` only once a task runs,
+    and are patched when it is imported (``__init__``).
+    """
+    from kg_microbe_merge_spark import worker_daemon
+
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    home = str(Path(__file__).resolve().parent.parent)
+    if home not in paths:
+        paths.append(home)
+    return {
+        "spark.python.daemon.module": worker_daemon.__name__,
+        **conf,
+        key: os.pathsep.join(paths),
+    }

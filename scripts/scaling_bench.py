@@ -77,7 +77,9 @@ def _run(script: str, *args: str, cores: int | None = None) -> dict:
             last_err = e
             print(f"# level attempt {attempt + 1} failed: {type(e).__name__}",
                   file=sys.stderr)
-            subprocess.run(["pkill", "-9", "-f", "pyspark.daemon"],
+            # local sessions start their workers from the package daemon
+            subprocess.run(["pkill", "-9", "-f",
+                            r"pyspark\.daemon|kg_microbe_merge_spark\.worker_daemon"],
                            check=False)
     raise RuntimeError(f"level failed after 3 attempts: {last_err}")
 

@@ -1,22 +1,29 @@
 """The mtime-aware zipimporter patch: skips the re-read when the archive
 is unchanged, still re-reads when it changes, and is applied on the
-Python workers (not just the driver)."""
+Python workers (not just the driver): a local session forks every worker
+from a daemon that already holds the patch."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
 import kg_microbe_merge_spark  # noqa: F401  - applies the patch on import
+from kg_microbe_merge_spark import session, worker_daemon
 from kg_microbe_merge_spark.workerenv import (
     patch_zipimporter_invalidate_caches,
 )
+
+HOME = str(Path(kg_microbe_merge_spark.__file__).resolve().parent.parent)
 
 
 def test_patch_is_applied_and_idempotent():
@@ -100,6 +107,86 @@ def test_patch_reaches_python_workers(spark):
         .all_ok
     )
     assert out is True
+
+
+_FRESH_SESSION = textwrap.dedent("""
+    import sys
+    sys.path.insert(0, {home!r})
+
+    from kg_microbe_merge_spark.functions.triples import triples_from_corpus
+    from kg_microbe_merge_spark.session import get_spark
+    from kg_microbe_merge_spark.sources.corpus import generate_corpus
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2,
+                      extra_conf={{"spark.driver.memory": "1g"}})
+
+    def probe(_):
+        import zipimport
+
+        zips = [
+            imp for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+            and imp.archive.endswith("pyspark.zip")
+        ]
+        return (
+            getattr(zipimport.zipimporter.invalidate_caches,
+                    "_kg_mtime_aware", False),
+            bool(zips) and all(
+                getattr(z, "_kg_zip_stamp", None) is not None for z in zips
+            ),
+        )
+
+    print("PROBE", spark.sparkContext.parallelize(range(4), 4).map(probe).collect())
+    rows = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "n int, k string")
+    print("LIST", sorted(tuple(r) for r in rows.groupBy("k").count().collect()))
+    print("TRIPLES", triples_from_corpus(generate_corpus(spark, 10, 1)).count())
+    spark.stop()
+""")
+
+
+def test_fresh_local_workers_start_patched(tmp_path):
+    """A fresh session run from outside the checkout: workers that never
+    import the package (a plain Python-RDD map) are patched from their
+    first task, with the ``pyspark.zip`` importer already stamped, and
+    list-frame scans and package UDFs run. A fresh process, because the
+    shared test session reuses workers that have imported the package."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION.format(home=HOME)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    out = dict(
+        line.split(" ", 1) for line in run.stdout.splitlines()
+        if line.startswith(("PROBE ", "LIST ", "TRIPLES "))
+    )
+    assert out.get("PROBE") == str([(True, True)] * 4), run.stderr[-4000:]
+    assert out.get("LIST") == str([("a", 2), ("b", 1)]), run.stderr[-4000:]
+    assert run.returncode == 0, run.stderr[-4000:]
+    assert int(out["TRIPLES"]) > 0
+    assert "found in sys.modules" not in run.stderr
+
+
+def test_only_local_masters_fork_workers_from_the_package_daemon(monkeypatch):
+    """No JVM: the builder ``get_spark`` uses sets the daemon module and
+    the workers' ``PYTHONPATH`` for local masters only, keeping a
+    caller-set ``PYTHONPATH`` ahead of the package's directory."""
+    key = "spark.executorEnv.PYTHONPATH"
+    caller = {key: os.pathsep.join(["deps/a", "deps/b"])}
+
+    monkeypatch.setenv("SPARK_MASTER", "spark://head:7077")
+    opts = session._builder("t", None, None, caller)._options
+    assert opts["spark.master"] == "spark://head:7077"
+    assert "spark.python.daemon.module" not in opts
+    assert opts[key] == caller[key]
+
+    for master in ("local", "local[4]"):
+        monkeypatch.setenv("SPARK_MASTER", master)
+        opts = session._builder("t", None, None, caller)._options
+        assert opts["spark.master"] == master
+        assert opts["spark.python.daemon.module"] == worker_daemon.__name__
+        assert opts[key].split(os.pathsep) == ["deps/a", "deps/b", HOME]
+    opts = session._builder("t", "local[2]", None, None)._options
+    assert opts[key] == HOME
 
 
 def test_local_relation_keeps_rows_types_and_nullability(spark):
