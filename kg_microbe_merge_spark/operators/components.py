@@ -99,7 +99,7 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 # Largest edge count solved on the driver; see "Scale notes".
 _DRIVER_THRESHOLD = 1_000_000
-# Default bound on the star rounds of the distributed solve.
+# Bound on the star rounds of the distributed solve.
 _MAX_ROUNDS = 50
 
 
@@ -133,7 +133,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = _MAX_ROUNDS,
 ) -> DataFrame:
     """Return ``(node, component)`` where ``component`` is the minimum
     node id in each connected component.
@@ -143,11 +142,11 @@ def connected_components(
     deterministic representative).
 
     At most ``_DRIVER_THRESHOLD`` edges are solved on the driver, more
-    by up to ``max_iterations`` star rounds; both return the same rows,
+    by up to ``_MAX_ROUNDS`` star rounds; both return the same rows,
     and the result is materialized either way.
     """
     probe = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    return _solve(probe, lambda rows: rows, lambda e: e, max_iterations)
+    return _solve(probe, lambda rows: rows, lambda e: e)
 
 
 def alias_group_components(aliases: DataFrame) -> DataFrame:
@@ -165,7 +164,7 @@ def alias_group_components(aliases: DataFrame) -> DataFrame:
     probe = aliases.select("alias", F.col("entity_id").alias("node")).filter(
         F.col("alias").isNotNull() & F.col("node").isNotNull()
     )
-    return _solve(probe, _group_edges, _group_star_edges, _MAX_ROUNDS)
+    return _solve(probe, _group_edges, _group_star_edges)
 
 
 def _group_edges(rows):
@@ -189,9 +188,7 @@ def _group_star_edges(groups: DataFrame) -> DataFrame:
     )
 
 
-def _solve(
-    probe: DataFrame, driver_edges, star_edges, max_iterations: int
-) -> DataFrame:
+def _solve(probe: DataFrame, driver_edges, star_edges) -> DataFrame:
     """The one solve path: one bounded collect of ``probe``; up to
     ``_DRIVER_THRESHOLD`` rows run ``_union_find(driver_edges(rows))``
     on the driver and come back as a ``LocalRelation``, more run the
@@ -200,7 +197,7 @@ def _solve(
     rows = probe.limit(_DRIVER_THRESHOLD + 1).collect()
     edges = star_edges(probe)
     if len(rows) > _DRIVER_THRESHOLD:
-        return _star_components(edges, max_iterations).localCheckpoint(eager=True)
+        return _star_components(edges).localCheckpoint(eager=True)
     t, nullable = edges.schema["src"].dataType, any(f.nullable for f in edges.schema)
     fields = [T.StructField(c, t, nullable) for c in ("node", "component")]
     return local_relation(
@@ -208,7 +205,7 @@ def _solve(
     )
 
 
-def _star_components(raw: DataFrame, max_iterations: int) -> DataFrame:
+def _star_components(raw: DataFrame) -> DataFrame:
     """Distributed path of :func:`connected_components` over ``(src, dst)``:
     large-star / small-star rounds until the edge set stops changing."""
     # node universe from the RAW edge list (before self-loop removal) so
@@ -221,7 +218,7 @@ def _star_components(raw: DataFrame, max_iterations: int) -> DataFrame:
     e = _canonical_edges(raw)
 
     prev_checksum = None
-    for i in range(max_iterations):
+    for i in range(_MAX_ROUNDS):
         e = _small_star(_large_star(e))
         # Checkpoint EVERY round, but LAZILY: the convergence-check
         # action below is what materializes it, so each round runs ONE
@@ -276,7 +273,6 @@ def connected_components_incremental(
     delta_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = _MAX_ROUNDS,
 ) -> DataFrame:
     """Fold a batch of NEW ``same_as`` edges into an existing
     ``(node, component)`` assignment without recomputing over the full
@@ -355,7 +351,7 @@ def connected_components_incremental(
     # Delta-sized, read by the probe and (above the threshold) the star
     # rounds: materialize once and truncate the lineage.
     qe = qe.localCheckpoint(eager=True)
-    qcc = connected_components(qe, max_iterations=max_iterations)
+    qcc = connected_components(qe)
     # Broadcast join #2: remap merged components across the full
     # assignment. `moved` is at most one row per quotient node.
     moved = qcc.filter(F.col("node") != F.col("component")).select(

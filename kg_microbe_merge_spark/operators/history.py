@@ -68,7 +68,6 @@ def scd2_apply(
     key_col: str,
     tracked_cols: Sequence[str],
     batch_id: int,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Fold ``delta`` (one row per key, columns ``key_col`` +
     ``tracked_cols``) into the SCD2 ``history`` at ``batch_id``.
@@ -82,16 +81,15 @@ def scd2_apply(
     satisfy this (each batch's history is written before the next is
     folded, the streaming/maintain.py versioned-publish pattern).
     """
-    maybe_bc = F.broadcast if broadcast_delta else (lambda df: df)
     cols = [key_col, *tracked_cols]
     d = delta.select(*cols)
-    keys = maybe_bc(d.select(key_col).distinct())
+    keys = F.broadcast(d.select(key_col).distinct())
 
     closed = history.filter(F.col("valid_to").isNotNull())
     current = history.filter(F.col("valid_to").isNull())
 
     untouched_current = current.join(keys, key_col, "left_anti")
-    affected = current.join(maybe_bc(d.withColumnsRenamed(
+    affected = current.join(F.broadcast(d.withColumnsRenamed(
         {c: f"_new_{c}" for c in tracked_cols}
     )), key_col, "inner")
 
@@ -120,7 +118,7 @@ def scd2_apply(
     # build side stays delta-sized (never the history-sized current
     # key set, which would force a shuffle join at scale)
     brand_new = d.join(
-        maybe_bc(affected.select(key_col)), key_col, "left_anti"
+        F.broadcast(affected.select(key_col)), key_col, "left_anti"
     ).select(
         key_col,
         *tracked_cols,

@@ -101,7 +101,6 @@ def nodes_merge_incremental(
     delta: DataFrame,
     priority_sources: list[str],
     sort_output: bool = True,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Fold raw ``delta`` node rows into a merged ``snapshot`` produced
     by :func:`nodes_merge_with_state`, returning the new snapshot
@@ -112,10 +111,8 @@ def nodes_merge_incremental(
         nodes_merge_incremental(nodes_merge_with_state(old, p), new, p)
           ==  nodes_merge_with_state(old UNION ALL new, p)
 
-    ``broadcast_delta=True`` (default) asserts the typical shape — the
-    delta is small next to the snapshot — and pins broadcast joins so
-    the snapshot side is never shuffled; pass ``False`` for deltas past
-    broadcast size and let AQE pick the join strategy.
+    The delta is assumed small next to the snapshot: broadcast joins
+    are pinned so the snapshot side is never shuffled.
 
     Schema alignment mirrors the KGX union-of-columns load semantics
     (``unionByName(allowMissingColumns=True)``): columns the delta lacks
@@ -145,10 +142,9 @@ def nodes_merge_incremental(
         F.max("name").alias("_d_max"),
         *[F.collect_set(F.col(c)).alias(f"_d_{c}") for c in other_cols],
     )
-    maybe_bc = F.broadcast if broadcast_delta else (lambda df: df)
     delta_ids = delta_agg.select("id")
 
-    untouched = snapshot.join(maybe_bc(delta_ids), "id", "left_anti")
+    untouched = snapshot.join(F.broadcast(delta_ids), "id", "left_anti")
 
     flag = F.coalesce(F.col(NAME_STATE_COLUMN), F.lit(False))
     old_prio = F.when(flag, F.col("name"))
@@ -163,9 +159,9 @@ def nodes_merge_incremental(
     # a sort-merge join and shuffle the snapshot — instead the affected
     # snapshot rows are carved out first with a broadcast semi join
     # (snapshot unshuffled), leaving an O(delta)-sized outer join.
-    affected_old = snapshot.join(maybe_bc(delta_ids), "id", "left_semi")
+    affected_old = snapshot.join(F.broadcast(delta_ids), "id", "left_semi")
     affected = (
-        delta_agg.join(maybe_bc(affected_old), "id", "left_outer")
+        delta_agg.join(F.broadcast(affected_old), "id", "left_outer")
         .select(
             "id",
             F.coalesce(new_prio, new_max).alias("name"),
@@ -183,7 +179,6 @@ def edges_merge_incremental(
     snapshot: DataFrame,
     delta: DataFrame,
     sort_output: bool = True,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Fold raw ``delta`` edge rows into a merged (s,p,o)-keyed snapshot
     produced by ``merge.edges_merge_provenance`` (or ``edges_merge``
@@ -222,12 +217,11 @@ def edges_merge_incremental(
             delta = delta.withColumn(c, F.lit(None).cast("string"))
         if c not in snapshot.columns:
             snapshot = snapshot.withColumn(c, F.lit(None).cast("string"))
-    maybe_bc = F.broadcast if broadcast_delta else (lambda df: df)
 
     if not payload:
         new_edges = delta.select(*keys).distinct()
-        existing = snapshot.join(maybe_bc(new_edges), keys, "left_semi")
-        fresh = new_edges.join(maybe_bc(existing), keys, "left_anti")
+        existing = snapshot.join(F.broadcast(new_edges), keys, "left_semi")
+        fresh = new_edges.join(F.broadcast(existing), keys, "left_anti")
         out = snapshot.unionByName(fresh)
         return out.orderBy(*keys) if sort_output else out
 
@@ -235,10 +229,10 @@ def edges_merge_incremental(
         *[F.collect_set(F.col(c)).alias(f"_d_{c}") for c in payload]
     )
     delta_keys = delta_agg.select(*keys)
-    untouched = snapshot.join(maybe_bc(delta_keys), keys, "left_anti")
-    affected_old = snapshot.join(maybe_bc(delta_keys), keys, "left_semi")
+    untouched = snapshot.join(F.broadcast(delta_keys), keys, "left_anti")
+    affected_old = snapshot.join(F.broadcast(delta_keys), keys, "left_semi")
 
-    affected = delta_agg.join(maybe_bc(affected_old), keys, "left_outer").select(
+    affected = delta_agg.join(F.broadcast(affected_old), keys, "left_outer").select(
         *keys, *[_merged_pipe(c) for c in payload]
     )
     out = untouched.select(*keys, *payload).unionByName(affected)

@@ -6,25 +6,32 @@ Stages (BASELINE.json north_star), each committed:
   linked → components (same_as CC, solved from the alias groups of the
   prior ≥ 0.5 dictionary) → canonical_triples → kgx_edges / kgx_nodes.
 
-Checkpoint/resume: each stage commits its output as a parquet snapshot
-directory plus a ``_STAGE_MANIFEST.json`` entry (stage name, input
-fingerprint, row count, wall seconds). A re-run skips stages whose
-manifest entry exists and whose input fingerprint matches — the
-parquet-directory analogue of resuming from the last committed Iceberg
-snapshot (the Iceberg runtime jar is not in this image; the commit
-protocol — write to _tmp, atomic rename, manifest append — mirrors a
-table-format commit). The reference's analogue is the never-enabled
-``checkpoint`` config flag (merge_schema.yaml:28-29).
+The package's one table commit (:meth:`PipelineRun.commit`; the
+``streaming`` folds reach it through :func:`publish`): a table is a
+directory of immutable versions ``<table>/v<N>/``, and one entry of the
+JSON manifest ``_STAGE_MANIFEST.json`` names the live one. A commit
+(1) writes the next version in full, (2) flips the entry with one
+``os.replace`` of the manifest, then (3) deletes every other version.
+Readers resolve the entry, never the bare directory, so a crash before
+(2) leaves the old version live and untouched, and one in (3) leaves
+stale versions the next commit deletes: the Iceberg metadata-pointer
+swap over parquet directories (no Iceberg jar in this image). Version
+names are relative to the manifest's directory, so a copied work dir
+resumes.
 
-Lineage metrics: every stage also writes ``_metrics/<stage>`` with one
-row per committed ``part-*`` file (``partition_id`` = file ordinal, row
-count, min/max of the stage key), read from the parquet footers on the
-driver — queryable provenance without touching the data files. The
-manifest's row count is the sum of the footer counts, and the manifest
-keeps the snapshot's schema, so a commit runs no Spark job after its
-write and a resumed stage reopens its snapshot without one. The cost is
-O(files) footer reads on the driver, which the commit protocol already
-assumes local (``shutil.rmtree``/``os.replace``).
+Checkpoint/resume: a stage's entry holds its version, input fingerprint,
+row count, schema and wall seconds, which one flip changes together. A
+re-run skips stages whose fingerprint matches. The reference's analogue
+is the never-enabled ``checkpoint`` config flag (merge_schema.yaml:28-29).
+
+Lineage metrics: each stage version holds the ``_LINEAGE.parquet``
+sidecar (a ``_`` name: Spark's reader skips it, pyarrow reads it) with
+one row per ``part-*`` file (``partition_id`` = file ordinal, row count,
+min/max of the stage key), read from the parquet footers on the driver.
+The manifest's row count is the sum of the footer counts and it keeps
+the snapshot's schema, so a commit runs no Spark job after its write and
+a resumed stage reopens its snapshot without one. The cost is O(files)
+footer reads on the driver, which the commit already assumes local.
 """
 
 from __future__ import annotations
@@ -52,6 +59,10 @@ from ..operators.merge import (
 from ..sources.corpus import alias_dictionary, generate_corpus
 
 MANIFEST_NAME = "_STAGE_MANIFEST.json"
+#: the lineage sidecar inside each stage version
+LINEAGE_NAME = "_LINEAGE.parquet"
+#: the manifest entry of a directory holding one table (:func:`publish`)
+SNAPSHOT = "snapshot"
 
 #: ``run_pipeline`` output name -> the stage that commits it
 OUTPUT_STAGES = {
@@ -74,22 +85,36 @@ class PipelineRun:
 
     def __post_init__(self) -> None:
         os.makedirs(self.work_dir, exist_ok=True)
-        os.makedirs(os.path.join(self.work_dir, "_metrics"), exist_ok=True)
-        mpath = os.path.join(self.work_dir, MANIFEST_NAME)
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                self.manifest = json.load(f)
+        self.manifest = _load_manifest(self.work_dir)
 
     def _save_manifest(self) -> None:
+        """A commit's flip: replace the manifest file in one ``os.replace``."""
         mpath = os.path.join(self.work_dir, MANIFEST_NAME)
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
             json.dump(self.manifest, f, indent=2)
         os.replace(tmp, mpath)
 
-    def _write_metrics(self, stage: str, out_dir: str, key: str) -> int:
-        """Write the stage's lineage rows from the footers of its
-        committed ``part-*`` files and return the stage's row count. No
+    def commit(self, name: str, write, table: str | None = None, keep: int = 1) -> str:
+        """Commit the next version of table ``name`` (the module
+        docstring's three steps) and return its path. ``write(path)``
+        writes the version and returns its manifest entry, which gains
+        ``version``. ``table`` is the table's directory relative to the
+        work dir (default ``name``); ``keep`` is how many committed
+        versions stay, newest first."""
+        table = name if table is None else table
+        live = self.manifest.get(name, {}).get("version")
+        n = _version_number(live) + 1 if live else 0
+        version = os.path.join(table, f"v{n}")
+        path = os.path.join(self.work_dir, version)
+        self.manifest[name] = {**write(path), "version": version}
+        self._save_manifest()
+        _drop_versions(os.path.join(self.work_dir, table), n, keep)
+        return path
+
+    def _write_metrics(self, stage: str, version: str, key: str) -> int:
+        """Write the lineage sidecar of a stage version from the footers
+        of its ``part-*`` files and return the stage's row count. No
         Spark job: one footer read per file on the driver.
 
         One row per file: ``partition_id`` (file ordinal in path order),
@@ -97,7 +122,7 @@ class PipelineRun:
         statistics of ``key``. Nulls are not counted in min/max. A file
         with non-null keys but no min/max in some row group records null
         for both: parquet-java writes no binary statistics over 4 KiB."""
-        files = _part_files(out_dir)
+        files = _part_files(version)
         rows, lows, highs = [], [], []
         key_type = pa.string()  # for a snapshot with no data file
         for f in files:
@@ -107,19 +132,14 @@ class PipelineRun:
             rows.append(md.num_rows)
             lows.append(lo)
             highs.append(hi)
-        cols = {
+        lineage = pa.table({
             "partition_id": pa.array(range(len(files)), pa.int32()),
             "rows": pa.array(rows, pa.int64()),
             "key_min": pa.array(lows, key_type),
             "key_max": pa.array(highs, key_type),
             "stage": pa.array([stage] * len(files), pa.string()),
-        }
-
-        def write(tmp: str) -> None:
-            os.makedirs(tmp)
-            pq.write_table(pa.table(cols), os.path.join(tmp, "part-00000.parquet"))
-
-        _replace_dir(os.path.join(self.work_dir, "_metrics", stage), write)
+        })
+        pq.write_table(lineage, os.path.join(version, LINEAGE_NAME))
         return sum(rows)
 
     def stage(
@@ -131,21 +151,17 @@ class PipelineRun:
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Run ``build() -> DataFrame`` (or return the committed snapshot
-        if this (stage, fingerprint) already committed). Commit =
-        write-to-tmp + atomic rename + manifest append. The only Spark
-        jobs are the write's: the snapshot is reopened with the schema it
-        was written with, and the row count and lineage come from the
-        parquet footers."""
-        out_dir = os.path.join(self.work_dir, name)
+        if this (stage, fingerprint) already committed) and commit it as
+        the stage's next version. The only Spark jobs are the write's:
+        the snapshot is reopened with the schema it was written with, and
+        the row count and lineage come from the parquet footers."""
         entry = self.manifest.get(name)
-        if (
-            entry
-            and entry.get("fingerprint") == fingerprint
-            and "schema" in entry
-            and os.path.exists(out_dir)
-        ):
+        live = _live_version(self.work_dir, entry)
+        if live and entry.get("fingerprint") == fingerprint and "schema" in entry:
+            # a crash after a write may have left another version
+            _drop_versions(os.path.dirname(live), _version_number(live))
             schema = StructType.fromJson(json.loads(entry["schema"]))
-            return self.spark.read.schema(schema).parquet(out_dir)
+            return self.spark.read.schema(schema).parquet(live)
         if metrics_key in (partition_by or []):
             raise ValueError(
                 f"metrics_key {metrics_key!r} is a partition column: "
@@ -153,38 +169,122 @@ class PipelineRun:
             )
         t0 = time.monotonic()
         df = build()
+        committed = None
 
-        def write(tmp_dir: str) -> None:
+        def write(version: str) -> dict:
+            nonlocal committed
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
-            w.parquet(tmp_dir)
+            w.parquet(version)
+            # an explicit schema skips inference; like inference, the
+            # reader puts partition columns last and makes every field
+            # nullable
+            committed = self.spark.read.schema(df.schema).parquet(version)
+            return {
+                "fingerprint": fingerprint,
+                "rows": self._write_metrics(name, version, metrics_key),
+                "schema": committed.schema.json(),
+                "wall_sec": round(time.monotonic() - t0, 3),
+            }
 
-        _replace_dir(out_dir, write)
-        # an explicit schema skips inference; like inference, the reader
-        # puts partition columns last and makes every field nullable
-        committed = self.spark.read.schema(df.schema).parquet(out_dir)
-        n = self._write_metrics(name, out_dir, metrics_key)
-        self.manifest[name] = {
-            "fingerprint": fingerprint,
-            "rows": n,
-            "schema": committed.schema.json(),
-            "wall_sec": round(time.monotonic() - t0, 3),
-        }
-        self._save_manifest()
+        self.commit(name, write)
         return committed
 
 
-def _replace_dir(path: str, write) -> None:
-    """Commit a directory: ``write(tmp)`` into ``path._tmp``, then swap it
-    in for ``path`` with a rename."""
-    tmp = path + "._tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    write(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.replace(tmp, path)
+def _load_manifest(work_dir: str) -> dict:
+    path = os.path.join(work_dir, MANIFEST_NAME)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _live_version(work_dir: str, entry: dict | None) -> str | None:
+    """The path of the version a manifest entry names, None if it names
+    none on disk."""
+    version = (entry or {}).get("version")
+    path = os.path.join(work_dir, version) if version else None
+    return path if path and os.path.isdir(path) else None
+
+
+def _version_number(version: str) -> int:
+    return int(os.path.basename(version)[1:])
+
+
+def _drop_versions(table_dir: str, live: int, keep: int = 1) -> None:
+    """Step 3 of a commit: delete every version of a table but the newest
+    ``keep`` up to the ``live`` one. Versions above it are crash-orphaned
+    writes."""
+    on_disk = list_versions(table_dir)
+    kept = [v for v in on_disk if v <= live][-max(keep, 1):]
+    for v in set(on_disk) - set(kept):
+        shutil.rmtree(os.path.join(table_dir, f"v{v}"), ignore_errors=True)
+
+
+def list_versions(base_dir: str) -> list[int]:
+    """Version numbers on disk under a table directory (``v<n>`` dirs),
+    ascending: the live one, those kept for time travel and any a crash
+    orphaned."""
+    if not os.path.isdir(base_dir):
+        return []
+    return sorted(
+        int(e[1:]) for e in os.listdir(base_dir) if e.startswith("v") and e[1:].isdigit()
+    )
+
+
+def live_snapshot(base_dir: str) -> str | None:
+    """The path of the live version of the table in ``base_dir`` (one
+    written by :func:`publish`), None before its first commit."""
+    return _live_version(base_dir, _load_manifest(base_dir).get(SNAPSHOT))
+
+
+def read_snapshot(
+    spark: SparkSession, base_dir: str, version: int | None = None
+) -> DataFrame | None:
+    """Read the table in ``base_dir``: its live version by default, or a
+    retained ``version`` number (time travel, the Iceberg ``VERSION AS
+    OF`` analogue). Returns None before the first commit; raises for a
+    version that was deleted or never existed."""
+    if version is None:
+        live = live_snapshot(base_dir)
+        return spark.read.parquet(live) if live else None
+    path = os.path.join(base_dir, f"v{version}")
+    if not os.path.isdir(path):
+        raise FileNotFoundError(
+            f"snapshot v{version} not retained in {base_dir}; "
+            f"available: {list_versions(base_dir)}"
+        )
+    return spark.read.parquet(path)
+
+
+def publish(
+    df: DataFrame,
+    base_dir: str,
+    marker: tuple[str, str] | None = None,
+    keep_versions: int = 1,
+) -> str:
+    """Commit ``df`` as the next version of the table in ``base_dir``
+    (versions ``<base_dir>/v<N>/``, a one-entry manifest beside them) and
+    return the version's path. ``keep_versions > 1`` retains older
+    versions for time travel (:func:`read_snapshot` with ``version=``)
+    and snapshot diffs (``operators/diff.py``).
+
+    ``marker=(filename, contents)`` writes a sidecar file into the
+    version before the flip (the name must start with ``_`` so Spark's
+    reader skips it): state that must travel atomically with the
+    snapshot, e.g. the Count-Min epoch ledger."""
+
+    def write(version: str) -> dict:
+        df.write.mode("overwrite").parquet(version)
+        if marker is not None:
+            fname, contents = marker
+            with open(os.path.join(version, fname), "w") as f:
+                f.write(contents)
+        return {}
+
+    run = PipelineRun(df.sparkSession, base_dir)
+    return run.commit(SNAPSHOT, write, table="", keep=keep_versions)
 
 
 def _part_files(snapshot: str) -> list[str]:

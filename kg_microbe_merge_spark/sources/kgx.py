@@ -144,9 +144,9 @@ def write_tsv_dir(df: DataFrame, output_dir: str) -> None:
 
 
 def write_parquet(df: DataFrame, output_dir: str) -> None:
-    """Columnar materialization (the production sink). Iceberg would be
-    ``df.writeTo(table).using("iceberg")`` — the Iceberg runtime jar is
-    not in this image, so parquet directories stand in; the layout
-    (snapshot-manifest in plans/pipeline.py) mirrors what an Iceberg
-    commit would record."""
+    """Columnar materialization (the production sink). It overwrites
+    ``output_dir`` in place, without the versioned commit of
+    ``plans/pipeline.py``, so a killed write leaves a partial directory.
+    Iceberg would be ``df.writeTo(table).using("iceberg")``; the Iceberg
+    runtime jar is not in this image."""
     df.write.mode("overwrite").parquet(output_dir)

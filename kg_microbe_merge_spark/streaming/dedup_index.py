@@ -7,7 +7,7 @@ ingesting pipeline asks a different question per micro-batch: "which
 of these NEW documents duplicate anything ALREADY ACCEPTED" — without
 re-scanning, re-shingling, or re-pairing the accumulated corpus. This
 module maintains the accepted corpus's MinHash index as a versioned
-snapshot (the ``maintain.py`` commit protocol) and folds each
+snapshot (the ``plans/pipeline.py`` commit protocol) and folds each
 micro-batch in two stages:
 
 1. **index probe** — the batch's banded signatures are BROADCAST and
@@ -71,13 +71,8 @@ from ..operators.dedup import (
     minhash_signatures,
     sig_est_jaccard,
 )
-from .maintain import (
-    _check_params,
-    _meta_marker,
-    _publish,
-    _read_meta,
-    read_snapshot,
-)
+from ..plans.pipeline import publish, read_snapshot
+from .maintain import _check_params, _meta_marker, _read_meta
 
 
 def fold_dedup_batch(
@@ -236,11 +231,11 @@ def fold_dedup_batch(
         )
 
     # pin the accepted rows BEFORE publishing: their lineage reaches
-    # through the presence anti-join into the CURRENT index version,
-    # which the publish below garbage-collects
+    # through the presence anti-join into the live index version, which
+    # the publish below deletes
     accepted = sig.select("doc_id", "sig", "bands").localCheckpoint(eager=True)
     new_index = accepted if index is None else index.unionByName(accepted)
-    _publish(
+    publish(
         new_index,
         index_dir,
         marker=_meta_marker({**params, "epoch": int(epoch_id)}),

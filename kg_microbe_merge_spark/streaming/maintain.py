@@ -15,15 +15,16 @@ Correctness under streaming semantics:
   a max, so re-folding a replayed micro-batch (Spark's foreachBatch
   at-least-once contract after a failure) converges to the same
   snapshot. Tested as ``fold(fold(S, d), d) == fold(S, d)``.
-* **crash-safe atomic publish**: the snapshot base dir holds immutable
-  version dirs ``v<epoch>`` plus a ``CURRENT`` pointer file; a batch
-  writes the NEXT version in full, then flips the pointer with an
-  atomic single-file ``os.replace``. The previous version is deleted
+* **crash-safe atomic publish**: each fold commits through the
+  package's one table commit (``plans/pipeline.publish``): the snapshot
+  dir holds immutable versions ``v<N>`` plus a one-entry JSON manifest
+  naming the live one; a batch writes the NEXT version in full, then
+  flips the manifest with one ``os.replace``, and deletes older versions
   only AFTER the flip, so there is no instant at which the accumulated
   state exists nowhere on disk (a plain rmtree-then-rename swap has
   exactly that window — a crash inside it silently truncates the KG to
   whatever the replayed micro-batch contains). Readers (and the next
-  fold) always resolve through :func:`read_snapshot`.
+  fold) always resolve through ``plans/pipeline.read_snapshot``.
 * **the batch-equivalence invariant** (driver-gated for the operators
   themselves as ``kg_incremental_upsert`` / ``kg_incremental_edges``)
   extends to streams: after draining any prefix of the delta stream,
@@ -32,8 +33,8 @@ Correctness under streaming semantics:
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,98 +46,7 @@ from ..operators.upsert import (
     nodes_merge_incremental,
     nodes_merge_with_state,
 )
-
-_CURRENT = "CURRENT"
-
-
-def _current_version(base_dir: str) -> str | None:
-    ptr = os.path.join(base_dir, _CURRENT)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        name = f.read().strip()
-    path = os.path.join(base_dir, name)
-    return path if name and os.path.exists(path) else None
-
-
-def list_versions(base_dir: str) -> list[int]:
-    """Retained snapshot version numbers, ascending (``v<n>`` dirs on
-    disk — how many survive is the publisher's ``keep_versions``)."""
-    if not os.path.isdir(base_dir):
-        return []
-    out = []
-    for entry in os.listdir(base_dir):
-        if entry.startswith("v") and entry[1:].isdigit():
-            out.append(int(entry[1:]))
-    return sorted(out)
-
-
-def read_snapshot(
-    spark: SparkSession, base_dir: str, version: int | None = None
-) -> DataFrame | None:
-    """Read a snapshot version: the CURRENT pointer by default, or an
-    explicit retained ``version`` number (time travel — the Iceberg
-    ``VERSION AS OF`` analogue over the versioned-dir commit protocol;
-    see ``plans/pipeline.py`` for why parquet dirs + atomic rename
-    stand in for Iceberg in this sandbox). Returns None when nothing
-    has been published yet; raises for a version that has been
-    garbage-collected or never existed."""
-    if version is not None:
-        path = os.path.join(base_dir, f"v{version}")
-        if not os.path.isdir(path):
-            raise FileNotFoundError(
-                f"snapshot v{version} not retained in {base_dir}; "
-                f"available: {list_versions(base_dir)}"
-            )
-        return spark.read.parquet(path)
-    cur = _current_version(base_dir)
-    return spark.read.parquet(cur) if cur else None
-
-
-def _publish(
-    df: DataFrame,
-    base_dir: str,
-    marker: tuple[str, str] | None = None,
-    keep_versions: int = 1,
-) -> None:
-    """Write ``df`` as the next immutable version, flip CURRENT
-    atomically, then garbage-collect versions beyond the newest
-    ``keep_versions``. A crash at any point leaves a readable snapshot:
-    before the flip the old version is untouched; the flip itself is a
-    single-file ``os.replace``.
-
-    ``keep_versions > 1`` retains older immutable versions for time
-    travel (:func:`read_snapshot` with ``version=``) and snapshot
-    diff/audit (``operators/diff.py``) — the retention knob of the
-    Iceberg-style commit protocol.
-
-    ``marker=(filename, contents)`` writes a sidecar file INTO the
-    version dir before the flip (filename must start with ``_`` so
-    Spark's parquet reader ignores it) — state that must travel
-    atomically with the snapshot, e.g. the Count-Min epoch ledger."""
-    os.makedirs(base_dir, exist_ok=True)
-    prev = _current_version(base_dir)
-    n = int(os.path.basename(prev)[1:]) if prev else -1
-    name = f"v{n + 1}"
-    df.write.mode("overwrite").parquet(os.path.join(base_dir, name))
-    if marker is not None:
-        fname, contents = marker
-        with open(os.path.join(base_dir, name, fname), "w") as f:
-            f.write(contents)
-    ptr = os.path.join(base_dir, _CURRENT)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(name)
-    os.replace(tmp, ptr)
-    # GC: retain the newest keep_versions PUBLISHED versions (number <=
-    # the one just flipped to); anything above it is a crash-orphaned
-    # partial write and is always removed.
-    published = [v for v in list_versions(base_dir) if v <= n + 1]
-    keep = {f"v{v}" for v in published[-max(keep_versions, 1):]}
-    keep.add(name)
-    for entry in os.listdir(base_dir):
-        if entry.startswith("v") and entry[1:].isdigit() and entry not in keep:
-            shutil.rmtree(os.path.join(base_dir, entry), ignore_errors=True)
+from ..plans.pipeline import live_snapshot, publish, read_snapshot
 
 
 def fold_batch(
@@ -160,7 +70,7 @@ def fold_batch(
         new_snap = nodes_merge_with_state(
             batch, priority_sources, sort_output=False
         )
-    _publish(new_snap, snapshot_dir, keep_versions=keep_versions)
+    publish(new_snap, snapshot_dir, keep_versions=keep_versions)
 
 
 def fold_edges_batch(
@@ -180,7 +90,7 @@ def fold_edges_batch(
         new_snap = edges_merge_incremental(snapshot, batch, sort_output=False)
     else:
         new_snap = edges_merge_provenance(batch, sort_output=False)
-    _publish(new_snap, snapshot_dir, keep_versions=keep_versions)
+    publish(new_snap, snapshot_dir, keep_versions=keep_versions)
 
 
 def run_kg_maintenance_stream(
@@ -251,7 +161,7 @@ def fold_cc_batch(
         )
     else:
         new_snap = connected_components(batch, src=src, dst=dst)
-    _publish(new_snap, snapshot_dir)
+    publish(new_snap, snapshot_dir)
 
 
 def run_cc_stream(
@@ -316,21 +226,14 @@ _META_FILE = "_META"
 
 
 def _read_meta(base_dir: str) -> dict | None:
-    cur = _current_version(base_dir)
-    if cur is None:
+    cur = live_snapshot(base_dir)
+    if cur is None or not os.path.exists(os.path.join(cur, _META_FILE)):
         return None
-    path = os.path.join(cur, _META_FILE)
-    if not os.path.exists(path):
-        return None
-    import json
-
-    with open(path) as f:
+    with open(os.path.join(cur, _META_FILE)) as f:
         return json.load(f)
 
 
 def _meta_marker(meta: dict) -> tuple[str, str]:
-    import json
-
     return (_META_FILE, json.dumps(meta, sort_keys=True))
 
 
@@ -373,7 +276,7 @@ def fold_hll_batch(
     cur = read_snapshot(spark, sketch_dir)
     if cur is not None:
         regs = hll_merge(cur, regs, group_cols)
-    _publish(regs, sketch_dir, marker=_meta_marker(meta))
+    publish(regs, sketch_dir, marker=_meta_marker(meta))
 
 
 def fold_cms_batch(
@@ -414,7 +317,7 @@ def fold_cms_batch(
     cur = read_snapshot(spark, sketch_dir)
     if cur is not None:
         c = cms_merge(cur, c)
-    _publish(
+    publish(
         c, sketch_dir, marker=_meta_marker({**params, "epoch": epoch_id})
     )
 
@@ -466,11 +369,11 @@ def compact_snapshot(
     maintenance stream accumulates thousands of KB-sized files and
     scan planning (file listing, footer reads, task scheduling)
     eventually dominates the read path. Compaction republishes the
-    CURRENT snapshot as ``ceil(on_disk_bytes / target_file_bytes)``
+    live snapshot as ``ceil(on_disk_bytes / target_file_bytes)``
     files through the same crash-safe version flip the folds use —
     readers never see a half-compacted snapshot, retention follows
     ``keep_versions`` exactly as fold publishes do, and a crash
-    mid-compaction leaves CURRENT on the uncompacted version.
+    mid-compaction leaves the uncompacted version live.
 
     Sizing uses the snapshot's ACTUAL on-disk parquet bytes (one
     driver-side directory walk — O(files), no data scan), not an
@@ -480,7 +383,7 @@ def compact_snapshot(
 
     Returns ``{files_before, files_after, bytes, partitions}``.
     """
-    cur = _current_version(base_dir)
+    cur = live_snapshot(base_dir)
     if cur is None:
         raise ValueError(f"no published snapshot under {base_dir}")
     sizes = [
@@ -490,9 +393,8 @@ def compact_snapshot(
     ]
     total = sum(sizes)
     n = max(1, -(-total // target_file_bytes))
-    df = read_snapshot(spark, base_dir)
-    _publish(df.repartition(int(n)), base_dir, keep_versions=keep_versions)
-    new_cur = _current_version(base_dir)
+    df = spark.read.parquet(cur)
+    new_cur = publish(df.repartition(int(n)), base_dir, keep_versions=keep_versions)
     files_after = sum(
         1 for f in os.listdir(new_cur) if f.endswith(".parquet")
     )
@@ -541,7 +443,7 @@ def fold_scd2_batch(
         new = scd2_init(batch, key_col, tracked_cols, batch_id)
     else:
         new = scd2_apply(snapshot, batch, key_col, tracked_cols, batch_id)
-    _publish(new, snapshot_dir, keep_versions=keep_versions)
+    publish(new, snapshot_dir, keep_versions=keep_versions)
 
 
 def run_scd2_stream(
@@ -607,7 +509,7 @@ def fold_kmv_batch(
     cur = read_snapshot(spark, sketch_dir)
     if cur is not None:
         sk = kmv_merge(cur, sk, group_cols, kk)
-    _publish(sk, sketch_dir, marker=_meta_marker(meta))
+    publish(sk, sketch_dir, marker=_meta_marker(meta))
 
 
 def fold_entailment_batch(
@@ -640,7 +542,7 @@ def fold_entailment_batch(
         new_snap = incremental_entailment(snapshot, batch, tbox)
     else:
         new_snap = rdfs_owl_entailment(batch, tbox)
-    _publish(new_snap, snapshot_dir, keep_versions=keep_versions)
+    publish(new_snap, snapshot_dir, keep_versions=keep_versions)
 
 
 def run_entailment_stream(
@@ -722,7 +624,7 @@ def fold_alias_batch(
             .groupBy("alias", "entity_id")
             .agg(F.sum("n_links").alias("n_links"))
         )
-    _publish(
+    publish(
         counts, alias_dir,
         marker=_meta_marker({**params, "epoch": epoch_id}),
     )

@@ -161,6 +161,28 @@ def test_product_import_sets_stay_small(module, limit):
     assert len(loaded) <= limit, loaded
 
 
+#: the calls that replace or delete a committed directory or pointer
+COMMIT_CALLS = {("os", "replace"), ("shutil", "rmtree")}
+
+
+def test_one_module_commits_tables():
+    """``os.replace`` and ``shutil.rmtree`` appear in one package module,
+    the commit protocol's (``plans/pipeline.py``), so every table write
+    goes through its one versioned-directory commit."""
+    users = set()
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                names = {(node.value.id, node.attr)}
+            elif isinstance(node, ast.ImportFrom):
+                names = {(node.module, a.name) for a in node.names}
+            else:
+                continue
+            if names & COMMIT_CALLS:
+                users.add(str(path.relative_to(ROOT)))
+    assert users == {f"{PKG}/plans/pipeline.py"}, users
+
+
 def _checkout_paths(path: Path) -> list[str]:
     """Absolute-path string literals in ``path`` that name this checkout
     or any directory holding the package."""

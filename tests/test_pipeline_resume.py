@@ -7,11 +7,28 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
-from kg_microbe_merge_spark.plans.pipeline import MANIFEST_NAME, run_pipeline
+from kg_microbe_merge_spark.plans.pipeline import (
+    LINEAGE_NAME,
+    MANIFEST_NAME,
+    run_pipeline,
+)
 
 N_DOCS = 200
+
+
+def _live(work_dir, stage):
+    """The stage version the work dir's manifest names."""
+    with open(os.path.join(work_dir, MANIFEST_NAME)) as f:
+        return os.path.join(work_dir, json.load(f)[stage]["version"])
+
+
+def _lineage(work_dir, stage) -> list[dict]:
+    """The lineage rows of the stage version the manifest names (Spark's
+    reader skips a ``_`` file even when named, so pyarrow reads it)."""
+    return pq.read_table(os.path.join(_live(work_dir, stage), LINEAGE_NAME)).to_pylist()
 
 
 def test_pipeline_end_to_end_and_resume(spark, tmp_path):
@@ -48,8 +65,8 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
         assert stage in manifest and manifest[stage]["rows"] >= 0
 
     # per-partition lineage metrics exist
-    metrics = spark.read.parquet(os.path.join(wd, "_metrics", "triples"))
-    assert {"partition_id", "rows", "stage"} <= set(metrics.columns)
+    metrics = _lineage(wd, "triples")
+    assert metrics and {"partition_id", "rows", "stage"} <= set(metrics[0])
 
     # edges are materialized partitioned by predicate -> a predicate
     # filter prunes at the file-listing level (PartitionFilters), no
@@ -106,8 +123,7 @@ def test_stage_commit_single_post_write_scan(spark, tmp_path):
     )
     assert jobs == write_jobs, f"stage() ran {jobs - write_jobs} jobs after its write"
     assert run.manifest["s1"]["rows"] == 100
-    metrics = spark.read.parquet(str(tmp_path / "wd" / "_metrics" / "s1"))
-    rows = metrics.agg({"rows": "sum"}).collect()[0][0]
+    rows = sum(r["rows"] for r in _lineage(run.work_dir, "s1"))
     assert rows == 100
     assert df.columns == ["k"]
 
@@ -121,7 +137,7 @@ def test_stage_commit_single_post_write_scan(spark, tmp_path):
 
 
 def _check_footer_lineage(spark, run, stage, key, check_range=True):
-    """Each ``_metrics/<stage>`` row equals a Spark count (and, with
+    """Each lineage sidecar row of the live stage version equals a Spark count (and, with
     ``check_range``, min/max of ``key``) over the committed file it names,
     and the manifest rows equal a Spark count of the snapshot. Returns the
     metrics rows in file order."""
@@ -131,10 +147,9 @@ def _check_footer_lineage(spark, run, stage, key, check_range=True):
 
     from kg_microbe_merge_spark.plans.pipeline import _part_files
 
-    snapshot = os.path.join(run.work_dir, stage)
+    snapshot = _live(run.work_dir, stage)
     files = _part_files(snapshot)
-    metrics = spark.read.parquet(os.path.join(run.work_dir, "_metrics", stage))
-    got = {r["partition_id"]: r for r in metrics.collect()}
+    got = {r["partition_id"]: r for r in _lineage(run.work_dir, stage)}
     assert sorted(got) == list(range(len(files)))
     per_file = {  # input_file_name() is a URI: unquote it back to the file path
         unquote(r["f"]): r
@@ -188,7 +203,7 @@ def test_stage_lineage_from_footers(spark, tmp_path):
         resumed = run.stage(stage, None, "fp", "k").schema
         assert resumed == fresh.schema
         if stage != "empty":  # no data file to infer a schema from
-            inferred = spark.read.parquet(os.path.join(run.work_dir, stage)).schema
+            inferred = spark.read.parquet(_live(run.work_dir, stage)).schema
             assert resumed.names == inferred.names
             if not partition_by:
                 assert resumed == inferred
@@ -246,6 +261,101 @@ def test_manifest_entry_without_schema_is_recomputed(spark, tmp_path):
     assert entry["rows"] == 7 and "schema" in entry
 
 
+def _boom(*_args, **_kwargs):
+    raise RuntimeError("injected fault")
+
+
+def _one_live_version(work_dir):
+    """Each committed stage's directory holds exactly the version its
+    manifest entry names."""
+    with open(os.path.join(work_dir, MANIFEST_NAME)) as f:
+        manifest = json.load(f)
+    for stage, entry in manifest.items():
+        on_disk = [v for v in os.listdir(os.path.join(work_dir, stage)) if v.startswith("v")]
+        assert [os.path.join(stage, v) for v in on_disk] == [entry["version"]], stage
+
+
+@pytest.mark.parametrize("fault", ["write", "flip", "drop"])
+def test_stage_commit_survives_a_fault_at_each_step(spark, tmp_path, monkeypatch, fault):
+    """A stage committed under fingerprint A is recomputed under B, with a
+    fault inside the version write, between the write and the manifest
+    flip, or between the flip and the deletion of the old version. The
+    manifest then names a version on disk, a re-run under A returns A's
+    rows and a re-run under B returns B's rows."""
+    import pyspark.sql.functions as F
+
+    from kg_microbe_merge_spark.plans import pipeline
+    from kg_microbe_merge_spark.plans.pipeline import PipelineRun
+
+    wd = str(tmp_path / "wd")
+
+    def old():
+        return spark.range(10).withColumnRenamed("id", "k")
+
+    def new():
+        return spark.range(100, 103).withColumnRenamed("id", "k")
+
+    def failing():  # the second of two write tasks fails
+        k = F.col("id")
+        return spark.range(100, 104, 1, 2).select(
+            F.when(k == 103, F.raise_error(F.lit("injected fault"))).otherwise(k).alias("k")
+        )
+
+    def rerun(build, fingerprint):
+        run = PipelineRun(spark, wd)
+        rows = sorted(r["k"] for r in run.stage("s", build, fingerprint, metrics_key="k").collect())
+        assert run.manifest["s"]["rows"] == len(rows)
+        assert os.path.isdir(_live(wd, "s"))
+        return rows
+
+    assert rerun(old, "A") == list(range(10))
+    with monkeypatch.context() as m:
+        if fault == "flip":
+            m.setattr(PipelineRun, "_save_manifest", _boom)
+        elif fault == "drop":
+            m.setattr(pipeline.shutil, "rmtree", _boom)
+        build = failing if fault == "write" else new
+        with pytest.raises(Exception, match="injected fault"):
+            PipelineRun(spark, wd).stage("s", build, "B", metrics_key="k")
+    assert os.path.isdir(_live(wd, "s"))
+    assert rerun(old, "A") == list(range(10))
+    assert rerun(new, "B") == [100, 101, 102]
+    _one_live_version(wd)
+
+
+def test_run_pipeline_recovers_from_a_killed_nodes_flip(spark, tmp_path, monkeypatch):
+    """A recompute killed at the ``kgx_nodes`` manifest flip leaves the
+    last committed KG live: re-runs with either the old or the killed
+    run's parameters return the nodes and edges of uninterrupted runs, and
+    after each clean run every stage directory holds one version."""
+    from kg_microbe_merge_spark.plans.pipeline import PipelineRun
+
+    def kg(work_dir, seed):
+        out = run_pipeline(spark, work_dir, n_docs=30, seed=seed)
+        got = tuple(sorted(map(tuple, out[t].collect())) for t in ("nodes", "edges"))
+        _one_live_version(work_dir)
+        return got
+
+    wd = str(tmp_path / "wd")
+    want_old = kg(wd, 1)
+    want_new = kg(str(tmp_path / "uninterrupted"), 2)
+    old_nodes = PipelineRun(spark, wd).manifest["kgx_nodes"]
+    save = PipelineRun._save_manifest
+
+    def kill_nodes_flip(run):
+        if run.manifest["kgx_nodes"]["fingerprint"] != old_nodes["fingerprint"]:
+            _boom()
+        save(run)
+
+    with monkeypatch.context() as m:
+        m.setattr(PipelineRun, "_save_manifest", kill_nodes_flip)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            run_pipeline(spark, wd, n_docs=30, seed=2)
+    assert PipelineRun(spark, wd).manifest["kgx_nodes"] == old_nodes
+    assert kg(wd, 1) == want_old
+    assert kg(wd, 2) == want_new
+
+
 def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
     """For every stage of a run: manifest rows equal a Spark count of the
     snapshot, the reopened schema equals the inferred one, and the
@@ -267,7 +377,7 @@ def test_run_pipeline_manifest_matches_snapshots(spark, tmp_path):
     for stage, key in keys.items():
         _check_footer_lineage(spark, run, stage, key)
     for name, stage in OUTPUT_STAGES.items():
-        inferred = spark.read.parquet(os.path.join(wd, stage)).schema
+        inferred = spark.read.parquet(_live(wd, stage)).schema
         assert out[name].schema == inferred, stage
     want = Counter(
         (d["url"], s, p, o, c)

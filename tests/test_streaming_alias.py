@@ -16,10 +16,10 @@ from kg_microbe_merge_spark.functions.links import (
     anchor_alias_dict,
     anchor_pair_counts,
 )
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 from kg_microbe_merge_spark.streaming.maintain import (
     fold_alias_batch,
     read_alias_dict,
-    read_snapshot,
     run_alias_stream,
 )
 

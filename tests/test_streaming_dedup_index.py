@@ -16,7 +16,7 @@ from kg_microbe_merge_spark.streaming.dedup_index import (
     read_rejects,
     run_dedup_stream,
 )
-from kg_microbe_merge_spark.streaming.maintain import read_snapshot
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 
 SCHEMA = StructType(
     [StructField("doc_id", StringType()), StructField("text", StringType())]

@@ -12,9 +12,9 @@ from pyspark.sql.types import StringType, StructField, StructType
 from kg_microbe_merge_spark.operators.entailment import (
     rdfs_owl_entailment,
 )
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 from kg_microbe_merge_spark.streaming.maintain import (
     fold_entailment_batch,
-    read_snapshot,
     run_entailment_stream,
 )
 

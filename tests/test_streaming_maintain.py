@@ -18,9 +18,9 @@ from kg_microbe_merge_spark.operators.upsert import (
     NAME_STATE_COLUMN,
     nodes_merge_with_state,
 )
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 from kg_microbe_merge_spark.streaming.maintain import (
     fold_batch,
-    read_snapshot,
     run_kg_maintenance_stream,
 )
 
@@ -135,7 +135,7 @@ def test_edge_fold_equals_batch_and_idempotent(spark, tmp_path):
 
     snap_dir = str(tmp_path / "esnap")
     a, b = edges("a", 25), edges("b", 15, start=2)
-    from kg_microbe_merge_spark.streaming.maintain import read_snapshot as rs
+    from kg_microbe_merge_spark.plans.pipeline import read_snapshot as rs
 
     fold_edges_batch(spark, spark.createDataFrame(a), snap_dir)
     fold_edges_batch(spark, spark.createDataFrame(b), snap_dir)
@@ -229,7 +229,7 @@ def test_cc_fold_replay_is_idempotent(spark, tmp_path):
 
 def test_half_written_version_never_breaks_readers(spark, tmp_path):
     # crash between version write and pointer flip leaves a stray
-    # version dir: readers must keep resolving the old CURRENT, and the
+    # version dir: readers must keep resolving the old live version, and the
     # next successful fold must still work (and GC the stray)
     snap_dir = str(tmp_path / "snapshot")
     fold_batch(spark, spark.createDataFrame(_rows("a", 10), SCHEMA), snap_dir, PRIO)
@@ -245,7 +245,7 @@ def test_half_written_version_never_breaks_readers(spark, tmp_path):
 
 def test_time_travel_retention_and_audit(spark, tmp_path):
     from kg_microbe_merge_spark.operators.diff import snapshot_diff
-    from kg_microbe_merge_spark.streaming.maintain import list_versions
+    from kg_microbe_merge_spark.plans.pipeline import list_versions
 
     snap_dir = str(tmp_path / "snapshot")
     b1 = spark.createDataFrame(_rows("a", 8), SCHEMA)
@@ -256,7 +256,7 @@ def test_time_travel_retention_and_audit(spark, tmp_path):
     fold_batch(spark, b2, snap_dir, PRIO, keep_versions=2)
     fold_batch(spark, b3, snap_dir, PRIO, keep_versions=2)
 
-    # only the newest two versions retained; CURRENT == the latest
+    # only the newest two versions retained; the live one == the latest
     assert list_versions(snap_dir) == [1, 2]
     cur = _snap(spark, snap_dir)
     v2 = {
@@ -289,17 +289,17 @@ def test_time_travel_retention_and_audit(spark, tmp_path):
 
 
 def test_compact_snapshot_reduces_files_preserves_rows(spark, tmp_path):
-    from kg_microbe_merge_spark.streaming.maintain import (
-        _publish,
-        compact_snapshot,
+    from kg_microbe_merge_spark.plans.pipeline import (
         list_versions,
+        publish,
         read_snapshot,
     )
+    from kg_microbe_merge_spark.streaming.maintain import compact_snapshot
 
     base = str(tmp_path / "snap")
     rows = [Row(id=f"X:{i}", name=f"n{i}") for i in range(200)]
     # publish deliberately fragmented: 16 part files for a tiny table
-    _publish(spark.createDataFrame(rows).repartition(16), base)
+    publish(spark.createDataFrame(rows).repartition(16), base)
     # materialize pre-compaction rows NOW: compaction GCs v0 under the
     # lazy DataFrame (keep_versions=1), exactly the reader hazard the
     # version flip protects *new* readers from
@@ -324,15 +324,12 @@ def test_compact_snapshot_reduces_files_preserves_rows(spark, tmp_path):
 
 
 def test_compact_snapshot_respects_target_and_retention(spark, tmp_path):
-    from kg_microbe_merge_spark.streaming.maintain import (
-        _publish,
-        compact_snapshot,
-        list_versions,
-    )
+    from kg_microbe_merge_spark.plans.pipeline import list_versions, publish
+    from kg_microbe_merge_spark.streaming.maintain import compact_snapshot
 
     base = str(tmp_path / "snap2")
     rows = [Row(id=f"X:{i}", name="y" * 500) for i in range(400)]
-    _publish(spark.createDataFrame(rows).repartition(8), base)
+    publish(spark.createDataFrame(rows).repartition(8), base)
     # tiny target -> several output files; keep_versions=2 retains the
     # uncompacted version for time travel
     stats = compact_snapshot(

@@ -16,9 +16,9 @@ from pyspark.sql.types import (
 )
 
 from kg_microbe_merge_spark.operators.history import scd2_from_log
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 from kg_microbe_merge_spark.streaming.maintain import (
     fold_scd2_batch,
-    read_snapshot,
     run_scd2_stream,
 )
 

@@ -15,10 +15,10 @@ from kg_microbe_merge_spark.operators.sketches import (
     cms_counters,
     hll_registers,
 )
+from kg_microbe_merge_spark.plans.pipeline import read_snapshot
 from kg_microbe_merge_spark.streaming.maintain import (
     fold_cms_batch,
     fold_hll_batch,
-    read_snapshot,
     run_sketch_stream,
 )
 
