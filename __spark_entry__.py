@@ -100,6 +100,7 @@ from kg_microbe_merge_spark.operators.projection import (
     random_projection_sql,
 )
 from kg_microbe_merge_spark.operators.quantize import sq8_topk, sq8_topk_sql
+from kg_microbe_merge_spark.workerenv import local_relation
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -1147,7 +1148,8 @@ def q_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast inequality join (BroadcastNestedLoop on a tiny band table
     — the standard Spark shape for interval lookup)."""
     part = _t(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_relation(
+        spark,
         [("low", 0.0, 933.0), ("mid", 933.0, 966.0), ("high", 966.0, 1e9)],
         "band string, lo double, hi double",
     )
@@ -1800,7 +1802,7 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("C"), F.col("c_custkey")).alias("src"),
         F.concat(F.lit("N"), F.col("c_nationkey")).alias("dst"),
     )
-    seeds = spark.createDataFrame([("N1",), ("N2",)], ["id"])
+    seeds = local_relation(spark, [("N1",), ("N2",)], "id string")
     return bfs_distances(
         e1.unionByName(e2), seeds, max_hops=2, src="src", dst="dst",
         directed=False,
@@ -2485,7 +2487,8 @@ def q_kg_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("rel:"), F.col("o_orderstatus")).alias("predicate"),
         F.concat(F.lit("L:"), F.col("o_orderkey") + 32).alias("object"),
     )
-    expect = spark.createDataFrame(
+    expect = local_relation(
+        spark,
         [("rel:O", "R", "A"), ("rel:F", "A", "N"), ("rel:P", "N", "R")],
         "predicate string, subject_category string, object_category string",
     )
@@ -2531,8 +2534,8 @@ def q_rdfs_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("Nation").alias("object"),
         )
     )
-    tbox = spark.createDataFrame(
-        _ENTAIL_TBOX, "subject string, predicate string, object string"
+    tbox = local_relation(
+        spark, _ENTAIL_TBOX, "subject string, predicate string, object string"
     )
     return rdfs_entailment(abox, tbox)
 
@@ -2561,8 +2564,8 @@ def q_entailment_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("Nation").alias("object"),
         )
     )
-    tbox = spark.createDataFrame(
-        _ENTAIL_TBOX, "subject string, predicate string, object string"
+    tbox = local_relation(
+        spark, _ENTAIL_TBOX, "subject string, predicate string, object string"
     )
     return rdfs_entailment_provenance(abox, tbox)
 
@@ -2672,8 +2675,8 @@ def q_owl_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    tbox = spark.createDataFrame(
-        _OWL_TBOX, "subject string, predicate string, object string"
+    tbox = local_relation(
+        spark, _OWL_TBOX, "subject string, predicate string, object string"
     )
     return rdfs_owl_entailment(abox, tbox)
 
@@ -2790,8 +2793,8 @@ def q_kg_incremental_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(False).alias("_init"),
     )
     rows = located.unionByName(roots).unionByName(adj)
-    tbox = spark.createDataFrame(
-        _OWL_TBOX, "subject string, predicate string, object string"
+    tbox = local_relation(
+        spark, _OWL_TBOX, "subject string, predicate string, object string"
     )
     init = rows.filter(F.col("_init")).drop("_init")
     delta = rows.filter(~F.col("_init")).drop("_init")
@@ -3027,8 +3030,8 @@ def q_bgp_over_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("Nation").alias("object"),
         )
     )
-    tbox = spark.createDataFrame(
-        _ENTAIL_TBOX, "subject string, predicate string, object string"
+    tbox = local_relation(
+        spark, _ENTAIL_TBOX, "subject string, predicate string, object string"
     )
     entailed = rdfs_entailment(abox, tbox)
     return bgp_query(

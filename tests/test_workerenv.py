@@ -1,7 +1,8 @@
 """The mtime-aware zipimporter patch: skips the re-read when the archive
 is unchanged, still re-reads when it changes, and is applied on the
 Python workers (not just the driver): a local session forks every worker
-from a daemon that already holds the patch."""
+from a daemon that already holds the patch. Also the local session's
+JVM: its conf, and the class-data archive it starts from or records."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import subprocess
 import sys
 import textwrap
+import time
 import zipfile
 import zipimport
 from pathlib import Path
@@ -166,27 +168,285 @@ def test_fresh_local_workers_start_patched(tmp_path):
     assert "found in sys.modules" not in run.stderr
 
 
+_CDS_SESSION = textwrap.dedent("""
+    import os
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, {home!r})
+
+    from pyspark import SparkContext
+
+    from kg_microbe_merge_spark.session import get_spark
+
+
+    def tree(root):
+        kids = {{}}
+        for d in os.listdir("/proc"):
+            try:
+                stat = Path("/proc", d, "stat").read_text()
+            except OSError:
+                continue
+            if d.isdigit():
+                ppid = int(stat.rsplit(")", 1)[1].split()[1])
+                kids.setdefault(ppid, []).append(int(d))
+        out, todo = [], [root]
+        while todo:
+            out.append(todo.pop())
+            todo += kids.get(out[-1], [])
+        return out
+
+
+    spark = get_spark(master="local[2]", shuffle_partitions=2,
+                      extra_conf={{"spark.driver.memory": "1g"}})
+    print("SUM", spark.sparkContext.parallelize(range(4), 2).map(lambda x: x + 1).sum())
+    proc = SparkContext._gateway.proc
+    maps = Path(f"/proc/{{proc.pid}}/maps").read_text().split()
+    print("MAPPED", sorted({{m for m in maps if m.endswith(".jsa")}}))
+    print("PIDS", tree(proc.pid))
+    spark.stop()
+    proc.stdin.close()
+    proc.wait()
+    # a shorter class list keeps the dump at exit short
+    for classlist in Path.home().glob(".cache/kg_microbe_merge_spark/cds/*.classlist"):
+        lines = classlist.read_text().splitlines(keepends=True)
+        classlist.write_text("".join(lines[:2000]))
+""")
+
+
+def _cds_session(home: Path) -> dict[str, str]:
+    """Run one local session in a fresh interpreter whose home is
+    ``home``, check that nothing it started is left running, and return
+    what it printed."""
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_CONF_DIR")}
+    run = subprocess.run(
+        [sys.executable, "-c", _CDS_SESSION.format(home=HOME)],
+        cwd=home, env={**env, "HOME": str(home)}, capture_output=True, text=True,
+        timeout=600,
+    )
+    out = dict(
+        line.split(" ", 1) for line in run.stdout.splitlines()
+        if line.startswith(("SUM ", "MAPPED ", "PIDS "))
+    )
+    assert run.returncode == 0 and out.get("SUM") == "10", run.stderr[-4000:]
+    assert "[cds" not in run.stdout
+    # the JVM was waited for; its Python workers exit on their own signal
+    left = [int(p) for p in out["PIDS"].strip("[]").split(", ")]
+    deadline = time.monotonic() + 10
+    while left and time.monotonic() < deadline:
+        time.sleep(0.1)
+        left = [p for p in left if _running(p)]
+    assert not left
+    # nothing else names the home: no JVM and no dump process
+    named = []
+    for d in os.listdir("/proc"):
+        try:
+            if d.isdigit() and str(home) in Path("/proc", d, "cmdline").read_text():
+                named.append(d)
+        except OSError:
+            continue
+    assert not named
+    return out
+
+
+def _running(pid: int) -> bool:
+    try:
+        return Path(f"/proc/{pid}/stat").read_text().rsplit(")", 1)[1].split()[0] != "Z"
+    except OSError:
+        return False
+
+
+@pytest.fixture(scope="module")
+def cds_home(tmp_path_factory):
+    """A home whose cache holds the archive the first session recorded,
+    dumped at its exit and published."""
+    home = tmp_path_factory.mktemp("cds_home")
+    _cds_session(home)
+    return home
+
+
+def test_second_session_starts_from_the_class_data_archive(cds_home):
+    """The first session records and publishes; a fresh second one maps
+    the archive, prints no ``[cds]`` line, and leaves nothing running."""
+    files = sorted(p.name for p in _cds_dir(cds_home).iterdir())
+    assert [f.rsplit(".", 1)[1] for f in files] == ["jsa", "lock"], files
+    archive = str(_cds_dir(cds_home) / files[0])
+    out = _cds_session(cds_home)
+    assert out["MAPPED"] == str([archive])
+
+
+def test_damaged_archive_falls_back_to_a_plain_start(cds_home):
+    """A truncated archive is refused by the JVM; one with garbage in its
+    core regions kills it before the gateway is up, and is deleted. Both
+    sessions start and run."""
+    archive = next(_cds_dir(cds_home).glob("*.jsa"))
+    good = archive.read_bytes()
+    archive.unlink()
+    archive.write_bytes(good[: len(good) // 4])
+    out = _cds_session(cds_home)
+    assert str(archive) not in out["MAPPED"]
+
+    archive.unlink()
+    archive.write_bytes(good[:1 << 20] + b"\xff" * (1 << 20) + good[2 << 20:])
+    out = _cds_session(cds_home)
+    assert str(archive) not in out["MAPPED"]
+    assert not archive.exists()
+
+
 def test_only_local_masters_fork_workers_from_the_package_daemon(monkeypatch):
-    """No JVM: the builder ``get_spark`` uses sets the daemon module and
+    """No JVM: the conf ``get_spark`` builds sets the daemon module and
     the workers' ``PYTHONPATH`` for local masters only, keeping a
     caller-set ``PYTHONPATH`` ahead of the package's directory."""
     key = "spark.executorEnv.PYTHONPATH"
     caller = {key: os.pathsep.join(["deps/a", "deps/b"])}
 
     monkeypatch.setenv("SPARK_MASTER", "spark://head:7077")
-    opts = session._builder("t", None, None, caller)._options
+    opts = session._conf("t", None, None, caller)
     assert opts["spark.master"] == "spark://head:7077"
     assert "spark.python.daemon.module" not in opts
     assert opts[key] == caller[key]
 
     for master in ("local", "local[4]"):
         monkeypatch.setenv("SPARK_MASTER", master)
-        opts = session._builder("t", None, None, caller)._options
+        opts = session._conf("t", None, None, caller)
         assert opts["spark.master"] == master
         assert opts["spark.python.daemon.module"] == worker_daemon.__name__
         assert opts[key].split(os.pathsep) == ["deps/a", "deps/b", HOME]
-    opts = session._builder("t", "local[2]", None, None)._options
+    opts = session._conf("t", "local[2]", None, None)
     assert opts[key] == HOME
+
+
+JAVA_OPTS = "spark.driver.extraJavaOptions"
+
+
+@pytest.fixture
+def launches(monkeypatch, tmp_path):
+    """No JVM yet, a home under ``tmp_path``, and a ``getOrCreate`` that
+    records the options and ``SPARK_CONF_DIR`` of each launch instead of
+    starting a JVM."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setenv("HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    seen = []
+
+    def get_or_create(builder):
+        seen.append((dict(builder._options), os.environ.get("SPARK_CONF_DIR")))
+        return "session"
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    return seen
+
+
+def _cds_dir(home) -> Path:
+    return Path(home) / ".cache" / "kg_microbe_merge_spark" / "cds"
+
+
+def test_class_data_flags_follow_the_callers_java_options(launches, tmp_path, monkeypatch):
+    """No archive: one process records the class list, and a process
+    that does not get the key's lock starts without flags. With the
+    archive: the JVM starts from it. The caller's options come first."""
+    recorded = []
+    monkeypatch.setattr(session._ClassData, "dump_at_exit",
+                        lambda cds, spark: recorded.append(cds))
+    conf = session._conf("t", "local[2]", None,
+                         {"spark.driver.memory": "1g", JAVA_OPTS: "-Da=1 -Db=2"})
+    key = session._cds_key(conf)
+    cds = _cds_dir(tmp_path)
+    empty = str(cds.parent / "conf")
+
+    assert session._start(conf) == "session"
+    classlist = cds / f"{key}.{os.getpid()}.classlist"
+    assert launches[-1] == ({**conf, JAVA_OPTS: (
+        f"-Da=1 -Db=2 -Xlog:cds*=off -XX:DumpLoadedClassList={classlist}")}, empty)
+    assert [r.classlist for r in recorded] == [classlist]
+
+    session._start(conf)  # the lock is held: a plain start
+    assert launches[-1] == (conf, None)
+    os.close(recorded[0].lock)
+
+    (cds / f"{key}.jsa").write_bytes(b"")
+    session._start(conf)
+    assert launches[-1] == ({**conf, JAVA_OPTS: (
+        f"-Da=1 -Db=2 -Xlog:cds*=off -XX:SharedArchiveFile={cds / key}.jsa")}, empty)
+    assert len(recorded) == 1
+
+
+def test_non_local_masters_get_no_class_data_flag(launches, tmp_path):
+    conf = session._conf("t", "spark://head:7077", None, {JAVA_OPTS: "-Da=1"})
+    (cds := _cds_dir(tmp_path)).mkdir(parents=True)
+    (cds / f"{session._cds_key(conf)}.jsa").write_bytes(b"")
+    session._start(conf)
+    assert launches == [(conf, None)]
+
+
+def test_real_conf_files_turn_class_data_off(launches, tmp_path, monkeypatch):
+    """CDS refuses a non-empty directory on the classpath; a conf
+    directory with a real file stays on it, so CDS stays off."""
+    real = tmp_path / "conf"
+    real.mkdir()
+    (real / "spark-env.sh.template").write_text("")
+    (real / "spark-defaults.conf").write_text("spark.executor.cores 1\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(real))
+    conf = session._conf("t", "local[2]", None, None)
+    session._start(conf)
+    assert launches == [(conf, str(real))]
+    assert os.environ["SPARK_CONF_DIR"] == str(real)
+    assert not _cds_dir(tmp_path).exists()
+
+
+def test_conf_dir_is_restored_after_launch(launches, tmp_path, monkeypatch):
+    """``SPARK_CONF_DIR`` points at the empty cache conf directory only
+    while the JVM launches, whether it was set before or not; an archive
+    that kills the JVM before its gateway is up is deleted and the
+    session launches once more without it."""
+    from pyspark.errors import PySparkRuntimeError
+    from pyspark.sql import SparkSession
+
+    conf = session._conf("t", "local[2]", None, {"spark.driver.memory": "1g"})
+    (cds := _cds_dir(tmp_path)).mkdir(parents=True)
+    archive = cds / f"{session._cds_key(conf)}.jsa"
+    archive.write_bytes(b"")
+    empty = str(cds.parent / "conf")
+
+    session._start(conf)
+    assert launches[-1][1] == empty
+    assert "SPARK_CONF_DIR" not in os.environ
+
+    templates = tmp_path / "templates"
+    templates.mkdir()
+    (templates / "log4j2.properties.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(templates))
+    session._start(conf)
+    assert launches[-1][1] == empty
+    assert os.environ["SPARK_CONF_DIR"] == str(templates)
+
+    def exited(builder):
+        launches.append((dict(builder._options), os.environ.get("SPARK_CONF_DIR")))
+        if "SharedArchiveFile" in builder._options.get(JAVA_OPTS, ""):
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+        return "session"
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", exited)
+    del launches[:]
+    assert session._start(conf) == "session"
+    assert [JAVA_OPTS in opts for opts, _ in launches] == [True, False]
+    assert not archive.exists()
+    assert os.environ["SPARK_CONF_DIR"] == str(templates)
+
+
+def test_class_data_key_covers_heap_and_java_options():
+    """A heap over 32 GB turns compressed oops off, and the JVM silently
+    rejects an archive dumped with them on: each heap gets its own key."""
+    def key(**extra):
+        return session._cds_key(session._conf("t", "local[2]", None, extra))
+
+    one = key(**{"spark.driver.memory": "1g"})
+    assert one == key(**{"spark.driver.memory": "1g"})
+    assert len({one, key(**{"spark.driver.memory": "48g"}),
+                key(**{"spark.driver.memory": "1g", JAVA_OPTS: "-Da=1"})}) == 3
 
 
 def test_local_relation_keeps_rows_types_and_nullability(spark):
