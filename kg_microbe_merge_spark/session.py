@@ -27,8 +27,13 @@ launches ``SPARK_CONF_DIR`` points at an empty ``<cache>/conf/``. CDS
 stays off when the conf directory holds anything but ``*.template``
 files, or when the home directory is not writable. An archive that kills
 the JVM before its gateway is up is deleted, and the session launches
-again without it. Deleting ``~/.cache/kg_microbe_merge_spark/cds/``
-resets all of it.
+again without it; such a crash writes its ``hs_err_pid<pid>.log`` into
+the cache directory, not the caller's cwd. An archive the JVM refuses
+without crashing (a truncated file) leaves it with no class-data sharing
+at all: after each start from an archive the session reads the JVM's
+``UseSharedSpaces`` flag over py4j (no Spark job) and deletes an archive
+it reads ``false`` for, so the next session of the key records a new
+one. Deleting ``~/.cache/kg_microbe_merge_spark/cds/`` resets all of it.
 """
 
 from __future__ import annotations
@@ -49,6 +54,8 @@ from pyspark.sql import SparkSession
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
 #: ``[cds]`` warnings otherwise go to the JVM's stdout
 _CDS_QUIET = "-Xlog:cds*=off"
+#: the flag that starts a JVM from a class-data archive
+_ARCHIVE = "-XX:SharedArchiveFile"
 
 
 def get_spark(
@@ -159,7 +166,7 @@ def _start(conf: dict[str, str]) -> SparkSession:
         if e.getCondition() != "JAVA_GATEWAY_EXITED" or cds.classlist:
             raise
         cds.archive.unlink(missing_ok=True)
-        spark = SparkSession.builder.config(map=conf).getOrCreate()
+        return SparkSession.builder.config(map=conf).getOrCreate()
     finally:
         if conf_dir is None:
             os.environ.pop("SPARK_CONF_DIR", None)
@@ -167,6 +174,10 @@ def _start(conf: dict[str, str]) -> SparkSession:
             os.environ["SPARK_CONF_DIR"] = conf_dir
     if cds.classlist:
         cds.dump_at_exit(spark)
+    elif not cds.mapped(spark):
+        # refused without a crash (a truncated file): the JVM then maps
+        # no archive at all, so let the next session record a new one
+        cds.archive.unlink(missing_ok=True)
     return spark
 
 
@@ -228,7 +239,20 @@ class _ClassData:
 
     def _use(self, flag: str, path: Path) -> None:
         opts = f"{self.options} {_CDS_QUIET} {flag}={shlex.quote(str(path))}"
+        if flag == _ARCHIVE:
+            # a corrupt archive can crash the JVM; keep its log out of the cwd
+            opts += f" -XX:ErrorFile={shlex.quote(str(self.root / 'hs_err_pid%p.log'))}"
         self.conf[_JAVA_OPTS] = opts.strip()
+
+    @staticmethod
+    def mapped(spark: SparkSession) -> bool:
+        """Whether ``spark``'s JVM shares class data: ``False`` when it
+        refused its archive and mapped none. Reads one VM flag, no job."""
+        jvm = spark.sparkContext._jvm
+        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        return bean.getVMOption("UseSharedSpaces").getValue() == "true"
 
     @classmethod
     def open(cls, conf: dict[str, str]) -> _ClassData | None:
@@ -247,7 +271,7 @@ class _ClassData:
             (root.parent / "conf").mkdir(exist_ok=True)
             cds = cls(conf, root, key)
             if cds.archive.exists():
-                cds._use("-XX:SharedArchiveFile", cds.archive)
+                cds._use(_ARCHIVE, cds.archive)
                 return cds
             if (root / f"{key}.log").exists():
                 return None
@@ -261,7 +285,7 @@ class _ClassData:
             return None
         if cds.archive.exists():  # published since the check above
             os.close(lock)
-            cds._use("-XX:SharedArchiveFile", cds.archive)
+            cds._use(_ARCHIVE, cds.archive)
             return cds
         # left by a recording process that died before its dump
         for stale in [*root.glob(f"{key}.*.classlist"), *root.glob(f"{key}.*.tmp")]:

@@ -6,7 +6,10 @@ cd "$(dirname "$0")/.."
 
 WORK_DIR="${1:-/tmp/kg_submit_run}"
 N_DOCS="${2:-2000}"
-MASTER="${3:-local[${SPARK_GRAFT_CPUS:-32}]}"
+# SPARK_GRAFT_CPUS is a deployment override; by default use the CPUs
+# this process may run on
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+MASTER="${3:-local[$CPUS]}"
 ZIP=/tmp/kg_microbe_merge_spark.zip
 
 rm -f "$ZIP"
@@ -21,6 +24,6 @@ EOF
 
 exec spark-submit \
   --master "$MASTER" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
+  --conf spark.sql.shuffle.partitions="$CPUS" \
   --py-files "$ZIP" \
   scripts/submit_pipeline.py "$WORK_DIR" "$N_DOCS"

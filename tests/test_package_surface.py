@@ -200,6 +200,27 @@ def _checkout_paths(path: Path) -> list[str]:
     return found
 
 
+#: the ways a script could read a knob from its environment
+ENV_READS = {("os", "environ"), ("os", "getenv"), ("os", "environb"), ("os", "getenvb")}
+
+
+def test_scripts_read_no_environment_variable():
+    """A script's variants are its arguments: none is selected only by an
+    environment variable."""
+    offenders = {}
+    for path in sorted((ROOT / "scripts").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                names = {(node.value.id, node.attr)}
+            elif isinstance(node, ast.ImportFrom):
+                names = {(node.module, a.name) for a in node.names}
+            else:
+                continue
+            if names & ENV_READS:
+                offenders.setdefault(path.name, []).append(node.lineno)
+    assert not offenders, offenders
+
+
 def test_scripts_hold_no_checkout_path():
     """Scripts find the package and ``BENCH/`` from their own location, so
     a script run from any checkout imports and writes that checkout."""

@@ -277,20 +277,22 @@ def test_second_session_starts_from_the_class_data_archive(cds_home):
 
 def test_damaged_archive_falls_back_to_a_plain_start(cds_home):
     """A truncated archive is refused by the JVM; one with garbage in its
-    core regions kills it before the gateway is up, and is deleted. Both
-    sessions start and run."""
+    core regions kills it before the gateway is up, and the crash log
+    stays out of the cwd. Both sessions start and run, and both archives
+    are deleted."""
     archive = next(_cds_dir(cds_home).glob("*.jsa"))
     good = archive.read_bytes()
     archive.unlink()
     archive.write_bytes(good[: len(good) // 4])
     out = _cds_session(cds_home)
     assert str(archive) not in out["MAPPED"]
+    assert not archive.exists()
 
-    archive.unlink()
     archive.write_bytes(good[:1 << 20] + b"\xff" * (1 << 20) + good[2 << 20:])
     out = _cds_session(cds_home)
     assert str(archive) not in out["MAPPED"]
     assert not archive.exists()
+    assert not list(cds_home.glob("hs_err_pid*.log"))
 
 
 def test_only_local_masters_fork_workers_from_the_package_daemon(monkeypatch):
@@ -323,7 +325,7 @@ JAVA_OPTS = "spark.driver.extraJavaOptions"
 def launches(monkeypatch, tmp_path):
     """No JVM yet, a home under ``tmp_path``, and a ``getOrCreate`` that
     records the options and ``SPARK_CONF_DIR`` of each launch instead of
-    starting a JVM."""
+    starting a JVM; every start from an archive reads as sharing it."""
     from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
@@ -337,6 +339,7 @@ def launches(monkeypatch, tmp_path):
         return "session"
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    monkeypatch.setattr(session._ClassData, "mapped", staticmethod(lambda spark: True))
     return seen
 
 
@@ -370,7 +373,8 @@ def test_class_data_flags_follow_the_callers_java_options(launches, tmp_path, mo
     (cds / f"{key}.jsa").write_bytes(b"")
     session._start(conf)
     assert launches[-1] == ({**conf, JAVA_OPTS: (
-        f"-Da=1 -Db=2 -Xlog:cds*=off -XX:SharedArchiveFile={cds / key}.jsa")}, empty)
+        f"-Da=1 -Db=2 -Xlog:cds*=off -XX:SharedArchiveFile={cds / key}.jsa "
+        f"-XX:ErrorFile={cds}/hs_err_pid%p.log")}, empty)
     assert len(recorded) == 1
 
 
