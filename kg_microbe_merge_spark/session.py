@@ -11,9 +11,10 @@ each session start: the classes Spark loads at start-up are mapped from
 ``~/.cache/kg_microbe_merge_spark/cds/<key>.jsa`` instead of being read
 from the jars and verified. The key covers the Java home and version, the
 Spark version, the ``$SPARK_HOME/jars`` listing (names, sizes, mtimes),
-and the session's ``spark.driver.memory`` and
-``spark.driver.extraJavaOptions``: a heap over 32 GB turns compressed
-oops off, and the JVM silently rejects an archive dumped with them on.
+and the session's ``spark.driver.memory``, ``spark.driver.extraJavaOptions``
+and ``spark.driver.extraClassPath``: a heap over 32 GB turns compressed
+oops off, and the JVM silently rejects an archive dumped with them on or
+for another classpath.
 
 The first session per key records the classes its JVM loads
 (``-XX:DumpLoadedClassList``, no measurable cost). At interpreter exit,
@@ -34,6 +35,21 @@ at all: after each start from an archive the session reads the JVM's
 ``UseSharedSpaces`` flag over py4j (no Spark job) and deletes an archive
 it reads ``false`` for, so the next session of the key records a new
 one. Deleting ``~/.cache/kg_microbe_merge_spark/cds/`` resets all of it.
+
+A local session that launches its JVM also reads and writes ``file:``
+paths through ``kgspark.NioLocalFileSystem`` (``jvm/``). Without
+``libhadoop``, which pip ``pyspark`` lacks, Hadoop's local filesystem
+forks ``chmod`` (~3 ms of CPU) for each file and directory it creates;
+this one sets the same modes through ``java.nio`` and writes no ``.crc``
+sidecars (parquet pages carry their own CRCs). ``javac`` builds it once
+into ``~/.cache/kg_microbe_merge_spark/jvm/<key>.jar``, keyed by the
+source, the Java ``release`` file and the ``hadoop-client-api`` jar's
+name and size; a failed build leaves ``<key>.log`` and is not retried.
+The jar follows the caller's ``spark.driver.extraClassPath``; a caller's
+``spark.hadoop.fs.file.impl`` wins. Without ``javac``, after a failed
+build, with an unwritable home, or on a JVM already up (a later session,
+``spark-submit``), the session keeps Hadoop's filesystem. Deleting
+``~/.cache/kg_microbe_merge_spark/`` resets the jar and the archives.
 """
 
 from __future__ import annotations
@@ -46,12 +62,16 @@ import shlex
 import shutil
 import subprocess
 import sys
+import tempfile
+import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 #: the driver JVM's options: the caller's, then the class-data flags
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
+#: the driver JVM's classpath head: the caller's, then the filesystem jar
+_CLASSPATH = "spark.driver.extraClassPath"
 #: ``[cds]`` warnings otherwise go to the JVM's stdout
 _CDS_QUIET = "-Xlog:cds*=off"
 #: the flag that starts a JVM from a class-data archive
@@ -146,13 +166,16 @@ def _local_worker_conf(conf: dict[str, str]) -> dict[str, str]:
 
 def _start(conf: dict[str, str]) -> SparkSession:
     """``getOrCreate`` on ``conf``. A local session that launches its JVM
-    starts it from its key's class-data archive, or records the class list
-    for it (module docstring)."""
+    gets the local filesystem jar and starts from its key's class-data
+    archive, or records the class list for it (module docstring)."""
     from pyspark import SparkContext
     from pyspark.errors import PySparkRuntimeError
 
     cds = None
-    if conf["spark.master"].startswith("local") and SparkContext._gateway is None:
+    # under spark-submit the JVM is up before Python, and its port is set
+    if (conf["spark.master"].startswith("local") and SparkContext._gateway is None
+            and "PYSPARK_GATEWAY_PORT" not in os.environ):
+        conf = _local_fs_conf(conf)
         cds = _ClassData.open(conf)
     if cds is None:
         return SparkSession.builder.config(map=conf).getOrCreate()
@@ -196,10 +219,56 @@ def _spark_home() -> Path:
     return Path(_find_spark_home())
 
 
+def _local_fs_conf(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` with the local filesystem that forks no ``chmod``, if its jar builds."""
+    jar = _local_fs_jar()
+    if jar is None:
+        return conf
+    return {"spark.hadoop.fs.file.impl": "kgspark.NioLocalFileSystem", **conf,
+            _CLASSPATH: os.pathsep.join(filter(None, [conf.get(_CLASSPATH), str(jar)]))}
+
+
+def _local_fs_jar() -> Path | None:
+    """The jar of ``jvm/NioLocalFileSystem.java``, built on first use;
+    ``None`` when it cannot be (module docstring)."""
+    java = _java_home()
+    jars = _spark_home() / "jars"
+    api = next(jars.glob("hadoop-client-api-*.jar"), None)
+    if java is None or not (java / "bin" / "javac").is_file() or api is None:
+        return None
+    src = Path(__file__).with_name("jvm") / "NioLocalFileSystem.java"
+    release = java / "release"
+    key = hashlib.sha256("\n".join([
+        src.read_text(), release.read_text() if release.is_file() else "",
+        f"{api.name} {api.stat().st_size}",
+    ]).encode()).hexdigest()[:20]
+    root = Path.home() / ".cache" / "kg_microbe_merge_spark" / "jvm"
+    jar, log = root / f"{key}.jar", root / f"{key}.log"
+    if jar.is_file():
+        return jar
+    if log.exists():
+        return None
+    try:
+        root.mkdir(parents=True, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=root) as tmp:
+            javac = [java / "bin" / "javac", "-nowarn", "-cp", jars / "*", "-d", tmp, src]
+            run = subprocess.run(javac, stdin=subprocess.DEVNULL, capture_output=True, timeout=300)
+            if run.returncode != 0:
+                log.write_bytes(run.stdout + run.stderr)
+                return None
+            with zipfile.ZipFile(built := Path(tmp, "fs.jar"), "w") as z:
+                for c in Path(tmp).rglob("*.class"):
+                    z.write(c, c.relative_to(tmp).as_posix())
+            os.replace(built, jar)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return jar
+
+
 def _cds_key(conf: dict[str, str]) -> str | None:
     """The hash of what a class-data archive is valid for: the JVM, the
-    Spark jars, and the driver's heap size and options; ``None`` without
-    a Java home."""
+    Spark jars, and the driver's heap size, options and classpath head;
+    ``None`` without a Java home."""
     import pyspark
 
     java = _java_home()
@@ -212,6 +281,7 @@ def _cds_key(conf: dict[str, str]) -> str | None:
         pyspark.__version__,
         conf["spark.driver.memory"],
         conf.get(_JAVA_OPTS, ""),
+        conf.get(_CLASSPATH, ""),
     ]
     with os.scandir(_spark_home() / "jars") as jars:
         parts += sorted(

@@ -2,12 +2,14 @@
 is unchanged, still re-reads when it changes, and is applied on the
 Python workers (not just the driver): a local session forks every worker
 from a daemon that already holds the patch. Also the local session's
-JVM: its conf, and the class-data archive it starts from or records."""
+JVM: its conf, the class-data archive it starts from or records, and the
+local filesystem it writes tables through."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -318,14 +320,69 @@ def test_only_local_masters_fork_workers_from_the_package_daemon(monkeypatch):
     assert opts[key] == HOME
 
 
+_TABLE_SESSION = textwrap.dedent("""
+    import os
+    import sys
+
+    sys.path.insert(0, {home!r})
+
+    from kg_microbe_merge_spark.session import get_spark
+
+    os.umask(0o022)
+    spark = get_spark(master="local[2]", shuffle_partitions=2,
+                      extra_conf={{"spark.driver.memory": "1g"}})
+    rows = spark.range(12).selectExpr("id", "char(97 + id % 3) AS k")
+    rows.write.partitionBy("k").parquet({out!r})
+    back = spark.read.parquet({out!r}).select("id", "k").collect()
+    print("ROWS", sorted(tuple(r) for r in back))
+    spark.stop()
+""")
+
+
+def test_local_tables_are_written_without_forking_chmod(tmp_path):
+    """A fresh local session writes a partitioned table and forks no
+    ``chmod`` (one first on ``PATH`` logs every call). The rows read back;
+    files are 0644 and directories 0755, the modes Hadoop's default umask
+    gives; ``_SUCCESS`` is written and no ``.crc`` file is. A real conf
+    file turns class-data sharing off, so no archive is dumped at exit."""
+    shim, log, out = tmp_path / "shim", tmp_path / "chmod.log", tmp_path / "table"
+    shim.mkdir()
+    (shim / "chmod").write_text(
+        f'#!/bin/sh\necho "$@" >> {log}\nexec {shutil.which("chmod")} "$@"\n')
+    (shim / "chmod").chmod(0o755)
+    (conf := tmp_path / "conf").mkdir()
+    (conf / "spark-defaults.conf").write_text("")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(HOME=str(tmp_path), SPARK_CONF_DIR=str(conf),
+               PATH=f"{shim}{os.pathsep}{env['PATH']}")
+    run = subprocess.run(
+        [sys.executable, "-c", _TABLE_SESSION.format(home=HOME, out=str(out))],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]
+    rows = [line.split(" ", 1)[1] for line in run.stdout.splitlines()
+            if line.startswith("ROWS ")]
+    assert rows == [str([(i, "abc"[i % 3]) for i in range(12)])]
+    assert not log.exists(), log.read_text()
+    written = [out, *out.rglob("*")]
+    assert {p.name for p in written if p.suffix == ".parquet"}
+    assert (out / "_SUCCESS").is_file()
+    assert not [p for p in written if p.name.endswith(".crc")]
+    modes = {p.relative_to(tmp_path): oct(p.stat().st_mode & 0o7777) for p in written}
+    assert modes == {p.relative_to(tmp_path): "0o755" if p.is_dir() else "0o644"
+                     for p in written}
+
+
 JAVA_OPTS = "spark.driver.extraJavaOptions"
+CLASSPATH = "spark.driver.extraClassPath"
+FILE_FS = "spark.hadoop.fs.file.impl"
 
 
 @pytest.fixture
-def launches(monkeypatch, tmp_path):
+def launched(monkeypatch, tmp_path):
     """No JVM yet, a home under ``tmp_path``, and a ``getOrCreate`` that
     records the options and ``SPARK_CONF_DIR`` of each launch instead of
-    starting a JVM; every start from an archive reads as sharing it."""
+    starting a JVM."""
     from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
@@ -339,12 +396,77 @@ def launches(monkeypatch, tmp_path):
         return "session"
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
-    monkeypatch.setattr(session._ClassData, "mapped", staticmethod(lambda spark: True))
     return seen
+
+
+@pytest.fixture
+def launches(launched, monkeypatch):
+    """``launched`` for the class-data tests: no local filesystem jar, and
+    every start from an archive reads as sharing it."""
+    monkeypatch.setattr(session, "_local_fs_jar", lambda: None)
+    monkeypatch.setattr(session._ClassData, "mapped", staticmethod(lambda spark: True))
+    return launched
 
 
 def _cds_dir(home) -> Path:
     return Path(home) / ".cache" / "kg_microbe_merge_spark" / "cds"
+
+
+@pytest.fixture
+def no_cds(launched, monkeypatch):
+    """``launched`` with class-data sharing off."""
+    monkeypatch.setattr(session._ClassData, "open", classmethod(lambda cls, conf: None))
+    return launched
+
+
+def test_launching_local_sessions_get_the_nio_filesystem(no_cds, tmp_path):
+    """A session that launches a local JVM gets the compiled jar after
+    the caller's classpath entries, and the filesystem class, unless the
+    caller named its own."""
+    caller = {CLASSPATH: os.pathsep.join(["deps/a.jar", "deps/b"])}
+    conf = session._conf("t", "local[2]", None, caller)
+    session._start(conf)
+    opts = no_cds[-1][0]
+    *head, jar = opts[CLASSPATH].split(os.pathsep)
+    assert head == ["deps/a.jar", "deps/b"]
+    assert Path(jar).parent == tmp_path / ".cache" / "kg_microbe_merge_spark" / "jvm"
+    with zipfile.ZipFile(jar) as z:
+        assert "kgspark/NioLocalFileSystem.class" in z.namelist()
+    assert opts == {**conf, CLASSPATH: opts[CLASSPATH], FILE_FS: "kgspark.NioLocalFileSystem"}
+
+    own = {**conf, FILE_FS: "org.apache.hadoop.fs.RawLocalFileSystem"}
+    session._start(own)
+    assert no_cds[-1][0] == {**own, CLASSPATH: opts[CLASSPATH]}
+
+
+def test_running_jvms_and_cluster_masters_get_no_nio_filesystem(no_cds, tmp_path, monkeypatch):
+    """A non-local master, and a session on a JVM that is already up
+    (whose classpath is fixed): one this process started, or the one
+    ``spark-submit`` started before Python. They start on the conf as
+    given."""
+    from pyspark import SparkContext
+
+    cluster = session._conf("t", "spark://head:7077", None, None)
+    session._start(cluster)
+    local = session._conf("t", "local[2]", None, None)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
+    session._start(local)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT")
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    session._start(local)
+    assert no_cds == [(cluster, None), (local, None), (local, None)]
+    assert not (tmp_path / ".cache").exists()
+
+
+def test_java_homes_without_javac_get_no_nio_filesystem(no_cds, tmp_path, monkeypatch):
+    """A Java home with no ``javac`` (a runtime only) builds no jar, and
+    the session starts on the conf as given."""
+    (jdk := tmp_path / "jdk" / "bin").mkdir(parents=True)
+    (jdk / "java").symlink_to(shutil.which("java"))
+    monkeypatch.setenv("JAVA_HOME", str(jdk.parent))
+    conf = session._conf("t", "local[2]", None, None)
+    session._start(conf)
+    assert no_cds == [(conf, None)]
 
 
 def test_class_data_flags_follow_the_callers_java_options(launches, tmp_path, monkeypatch):
@@ -443,14 +565,16 @@ def test_conf_dir_is_restored_after_launch(launches, tmp_path, monkeypatch):
 
 def test_class_data_key_covers_heap_and_java_options():
     """A heap over 32 GB turns compressed oops off, and the JVM silently
-    rejects an archive dumped with them on: each heap gets its own key."""
+    rejects an archive dumped with them on or for another classpath: each
+    heap, option string and classpath head gets its own key."""
     def key(**extra):
         return session._cds_key(session._conf("t", "local[2]", None, extra))
 
     one = key(**{"spark.driver.memory": "1g"})
     assert one == key(**{"spark.driver.memory": "1g"})
     assert len({one, key(**{"spark.driver.memory": "48g"}),
-                key(**{"spark.driver.memory": "1g", JAVA_OPTS: "-Da=1"})}) == 3
+                key(**{"spark.driver.memory": "1g", JAVA_OPTS: "-Da=1"}),
+                key(**{"spark.driver.memory": "1g", CLASSPATH: "deps/a.jar"})}) == 4
 
 
 def test_local_relation_keeps_rows_types_and_nullability(spark):
